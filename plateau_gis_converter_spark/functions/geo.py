@@ -9,6 +9,7 @@ Formula parity:
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -58,60 +59,65 @@ def with_point_tiles(df, z: Column, lng_udeg: str = "lng_udeg",
               .withColumn("y", tile_y(z, my)))
 
 
-def hilbert_id_expr(df, z: str = "z", x: str = "x", y: str = "y",
-                    out: str = "tile_id", max_zoom: int = 20,
-                    const_z: int | None = None):
-    """PMTiles Hilbert id as PURE Catalyst expressions — the unrolled
-    bit-fold of nusamai-mvt/src/tileid/hilbert.rs:18-39 (same math as
-    kernels/hilbert.zxy_to_id), so the 10^12-row tile path needs no Python
-    at all. i64 two's-complement arithmetic is congruent mod 2^64 with the
-    reference's u64 wrapping (low bits identical; ids < 2^63 for z <= 31).
+# Hilbert automaton over _HILBERT_K-bit steps. The fold of hilbert.rs:18-39
+# reads one (x, y) bit pair per level, high to low, and leaves the lower
+# bits of (tx, ty) swapped and/or complemented. That pair of flags is the
+# whole state: 2 bits, 4 states. _HILBERT_TABLE[state << 2k | xk << k | yk]
+# replays the reference fold over k levels from that state and holds the
+# k base-4 digits it emits (2k bits) above the 2-bit next state.
+_HILBERT_K = 3
 
-    Plan-size discipline (round 3): each fold level gets FRESH column
-    names via one ``select`` per level — the previous
-    withColumn+withColumnRenamed chain made Catalyst's CollapseProject/
-    alias rules ping-pong to the optimizer's 100-iteration cap, costing
-    ~10 s of DRIVER time per fresh plan (execution of the optimized plan
-    is ~0.1 s/9M rows; the cost was entirely plan-side). Pass ``const_z``
-    when every row has the same zoom: the per-level ``level < z`` masks
-    drop out and the fold emits exactly ``const_z`` levels.
+
+def _hilbert_table(k: int) -> list[int]:
+    table = []
+    for state in range(4):
+        for xk in range(1 << k):
+            for yk in range(1 << k):
+                swap, comp, digits = state & 1, state >> 1, 0
+                for i in range(k - 1, -1, -1):
+                    bx, by = (xk >> i) & 1, (yk >> i) & 1
+                    rx, ry = (by, bx) if swap else (bx, by)
+                    rx, ry = rx ^ comp, ry ^ comp
+                    digits = (digits << 2) | ((3 * rx) ^ ry)
+                    if ry == 0:  # flip when rx == 1, then swap
+                        comp ^= rx
+                        swap ^= 1
+                table.append((digits << 2) | (comp << 1) | swap)
+    return table
+
+
+_HILBERT_TABLE = np.array(_hilbert_table(_HILBERT_K), dtype=np.int64)
+
+
+def hilbert_id_expr(z: int, x: Column, y: Column) -> Column:
+    """PMTiles Hilbert id (nusamai-mvt/src/tileid/hilbert.rs:18-39) of
+    the zoom-``z`` tile (x, y) as one Catalyst expression: acc_z plus
+    ceil(z/k) ``element_at`` lookups into one literal table (above).
+
+    The top step is padded with leading zero bits. A zero level emits
+    digit 0 and toggles the swap flag, so starting with swap = padding
+    mod 2 reaches the reference's initial state at level z-1. Only the
+    low ``z`` bits of x and y are read, as in the reference. Ids stay
+    below 2^63 for z <= 31, so bigint is exact.
     """
-    # integer DIV keeps acc exact (double division could round at 2^40)
-    if const_z is not None:
-        acc0 = F.lit(((1 << (2 * const_z)) - 1) // 3).cast("bigint")
-        levels = range(const_z - 1, -1, -1)
-    else:
-        acc0 = F.expr(
-            f"(CAST(pow(2.0, {z} * 2) AS BIGINT) - 1) DIV 3").cast("bigint")
-        levels = range(max_zoom - 1, -1, -1)
-    keep = [F.col(c) for c in df.columns]
-    cur = df.select(*keep, acc0.alias("_h_acc0"),
-                    F.col(x).cast("bigint").alias("_h_tx0"),
-                    F.col(y).cast("bigint").alias("_h_ty0"))
-    i = 0
-    for a in levels:
-        s = 1 << a
-        txc, tyc, accc = f"_h_tx{i}", f"_h_ty{i}", f"_h_acc{i}"
-        rx = F.shiftright(F.col(txc), a).bitwiseAND(F.lit(1))
-        ry = F.shiftright(F.col(tyc), a).bitwiseAND(F.lit(1))
-        # rotate (hilbert.rs:30-39): ry==0 -> maybe flip, then swap
-        flip = (ry == 0) & (rx == 1)
-        fx = F.when(flip, F.lit(s - 1) - F.col(txc)).otherwise(F.col(txc))
-        fy = F.when(flip, F.lit(s - 1) - F.col(tyc)).otherwise(F.col(tyc))
-        ntx = F.when(ry == 0, fy).otherwise(F.col(txc))
-        nty = F.when(ry == 0, fx).otherwise(F.col(tyc))
-        step = (F.lit(s).cast("bigint") * F.lit(s)
-                * (rx * 3).bitwiseXOR(ry).cast("bigint"))
-        nacc = F.col(accc) + step
-        if const_z is None:
-            active = F.col(z) > a
-            nacc = F.when(active, nacc).otherwise(F.col(accc))
-            ntx = F.when(active, ntx).otherwise(F.col(txc))
-            nty = F.when(active, nty).otherwise(F.col(tyc))
-        i += 1
-        cur = cur.select(*keep, nacc.alias(f"_h_acc{i}"),
-                         ntx.alias(f"_h_tx{i}"), nty.alias(f"_h_ty{i}"))
-    return cur.select(*keep, F.col(f"_h_acc{i}").alias(out))
+    if not 0 <= z <= 31:
+        raise ValueError(f"Hilbert zoom must be in [0, 31], got {z}")
+    k = _HILBERT_K
+    steps = -(-z // k)
+    table = F.lit(_HILBERT_TABLE)
+    tid = F.lit(((1 << (2 * z)) - 1) // 3).cast("bigint")
+    x, y = x.cast("bigint"), y.cast("bigint")
+    entry = F.lit((steps * k - z) % 2).cast("bigint")
+    for j in range(steps):
+        shift = k * (steps - 1 - j)
+        mask = (1 << (z - shift if j == 0 else k)) - 1
+        xk = F.shiftright(x, shift).bitwiseAND(mask)
+        yk = F.shiftright(y, shift).bitwiseAND(mask)
+        idx = (F.shiftleft(entry.bitwiseAND(3), 2 * k)
+               .bitwiseOR(F.shiftleft(xk, k)).bitwiseOR(yk))
+        entry = F.element_at(table, (idx + 1).cast("int"))
+        tid = tid + F.shiftleft(F.shiftright(entry, 2), 2 * shift)
+    return tid
 
 
 def salted_key(key: Column, salt_buckets: int, salt_source: Column) -> Column:

@@ -3,9 +3,8 @@
 * ``assign_point_tiles`` — explode each geocoded page into its (z, x, y)
   square-scheme tiles for z in [min_z, max_z] (the reference's zoom loop,
   nusamai/src/sink/mvt/slice.rs:63-71, for the degenerate point case), all in
-  Catalyst expressions; the Hilbert tile id (the global sort/partition key,
-  sink/mvt/mod.rs:223) is computed by a vectorized Arrow UDF over the NumPy
-  kernel.
+  Catalyst expressions, including the Hilbert tile id (the global
+  sort/partition key, sink/mvt/mod.rs:223; ``functions/geo.hilbert_id_expr``).
 * ``slice_boundary_polygons`` — geojson-vt slicing of polygon features into
   per-tile clipped multipolygons via ``mapInPandas`` (1→N flatMap, the Spark
   equivalent of the reference's Transform trait, SURVEY §2.9); exact
@@ -19,7 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..functions import geo
 from ..kernels import clip as clip_kernel
@@ -27,26 +25,13 @@ from ..kernels import hilbert
 from ..kernels.mercator import lnglat_to_web_mercator
 
 
-@pandas_udf(T.LongType())
-def hilbert_id_udf(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-    """(z,x,y) -> PMTiles Hilbert id (kernels/hilbert.py; ids < 2^63 for
-    z <= 31 so LongType is lossless)."""
-    tid = hilbert.zxy_to_id(z.to_numpy(np.int64), x.to_numpy(np.int64),
-                            y.to_numpy(np.int64))
-    return pd.Series(tid.astype(np.int64))
-
-
 def assign_point_tiles(df: DataFrame, min_z: int = 7, max_z: int = 15,
-                       with_tile_id: bool = True,
-                       tile_id_impl: str = "catalyst") -> DataFrame:
+                       with_tile_id: bool = True) -> DataFrame:
     """Explode geocoded pages into (z, x, y[, tile_id]) tile assignments.
 
     Input needs lng_udeg/lat_udeg (see operators/geocode.py). The mercator
     transform is computed once per page, the per-zoom floor is a cheap
-    codegen'd expression — no shuffle in this operator at all. The Hilbert
-    id defaults to the pure-Catalyst unrolled fold
-    (functions/geo.hilbert_id_expr) so the whole operator is JVM codegen;
-    ``tile_id_impl='arrow'`` keeps the NumPy-kernel UDF path.
+    codegen'd expression — no shuffle in this operator at all.
 
     The zoom range is schema-validated at PLAN time (parameters.py,
     reference parameters/mod.rs parity) — a bad range raises here on the
@@ -60,39 +45,29 @@ def assign_point_tiles(df: DataFrame, min_z: int = 7, max_z: int = 15,
     base = (df
             .where(F.col("lng_udeg").isNotNull()
                    & F.col("lat_udeg").isNotNull())
-            .withColumn("_xm", geo.tile_x(F.lit(max_z), mx))
-            .withColumn("_ym", geo.tile_y(F.lit(max_z), my)))
+            .withColumns({"_xm": geo.tile_x(F.lit(max_z), mx),
+                          "_ym": geo.tile_y(F.lit(max_z), my)}))
     # Derive every zoom from the max_z coordinates by shifts instead of
     # re-flooring the mercator per zoom: x_z = x_maxz >> (max_z - z) is
     # exact (floor(floor(a)/2^k) == floor(a/2^k)), and the antimeridian
     # wrap / row clamp applied at max_z commutes with the shift (proof in
     # tests/test_operators_spatial.py equivalence test). Likewise PMTiles
     # Hilbert ids are HIERARCHICAL — id_z = acc_z + (id_maxz - acc_maxz)
-    # >> 2*(max_z - z) — so the 16-level bit-fold runs ONCE per point
-    # instead of once per (point, zoom): ~9x less fold work for the
-    # z7..15 explode, bit-identical output (kernel-verified property).
-    if with_tile_id and tile_id_impl == "catalyst":
-        base = geo.hilbert_id_expr(
-            base, z=None, x="_xm", y="_ym", out="_tidm",
-            const_z=max_z)
-    out = (base
-           .withColumn("z", F.explode(F.sequence(F.lit(min_z), F.lit(max_z))))
-           .withColumn("x", F.expr(f"shiftright(_xm, {max_z} - z)"))
-           .withColumn("y", F.expr(f"shiftright(_ym, {max_z} - z)"))
-           .drop("_xm", "_ym"))
+    # >> 2*(max_z - z) — so the Hilbert fold runs ONCE per point instead
+    # of once per (point, zoom).
+    zoomed = {"x": F.expr(f"shiftright(_xm, {max_z} - z)"),
+              "y": F.expr(f"shiftright(_ym, {max_z} - z)")}
     if with_tile_id:
-        if tile_id_impl == "catalyst":
-            acc_maxz = ((1 << (2 * max_z)) - 1) // 3
-            out = (out.withColumn(
-                "tile_id",
-                F.expr(f"((cast(1 as bigint) << (2 * z)) - 1) div 3 + "
-                       f"shiftright(_tidm - {acc_maxz}L, "
-                       f"2 * ({max_z} - z))"))
-                .drop("_tidm"))
-        else:
-            out = out.withColumn(
-                "tile_id", hilbert_id_udf(F.col("z"), F.col("x"), F.col("y")))
-    return out
+        base = base.withColumn(
+            "_tidm", geo.hilbert_id_expr(max_z, F.col("_xm"), F.col("_ym")))
+        acc_maxz = ((1 << (2 * max_z)) - 1) // 3
+        zoomed["tile_id"] = F.expr(
+            f"((cast(1 as bigint) << (2 * z)) - 1) div 3 + "
+            f"shiftright(_tidm - {acc_maxz}L, 2 * ({max_z} - z))")
+    return (base
+            .withColumn("z", F.explode(F.sequence(F.lit(min_z), F.lit(max_z))))
+            .withColumns(zoomed)
+            .drop("_xm", "_ym", "_tidm"))
 
 
 SLICED_SCHEMA = T.StructType([

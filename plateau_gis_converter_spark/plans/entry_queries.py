@@ -304,7 +304,7 @@ FROM g GROUP BY 1, 2, 3, 4, 5
 
 
 def q_hilbert_tile_id(spark, sf_dir):
-    """G8: PMTiles Hilbert ids for the z12..15 tiles (vectorized Arrow UDF)."""
+    """G8: PMTiles Hilbert ids for the z12..15 tiles (Catalyst table fold)."""
     pts = _points_df(spark, sf_dir)
     return (ta.assign_point_tiles(pts, 12, 15, with_tile_id=True)
             .select("doc_id", "z", "x", "y", "tile_id"))

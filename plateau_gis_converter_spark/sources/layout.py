@@ -46,11 +46,11 @@ from ..functions import geo
 def hilbert_key(df: DataFrame, z: int = 12, lng_col: str = "lng_udeg",
                 lat_col: str = "lat_udeg", out: str = "hkey") -> DataFrame:
     """Append the zoom-``z`` PMTiles Hilbert id of each point as ``out``
-    (pure Catalyst — the const_z unrolled bit-fold)."""
-    cols = df.columns
-    t = geo.with_point_tiles(df, F.lit(z).cast("int"), lng_col, lat_col)
-    h = geo.hilbert_id_expr(t, x="x", y="y", out=out, const_z=z)
-    return h.select(*cols, out)
+    (pure Catalyst — ``functions/geo.hilbert_id_expr``)."""
+    zl = F.lit(z)
+    x = geo.tile_x(zl, geo.mercator_mx(geo.udeg_to_deg(F.col(lng_col))))
+    y = geo.tile_y(zl, geo.mercator_my(geo.udeg_to_deg(F.col(lat_col))))
+    return df.withColumn(out, geo.hilbert_id_expr(z, x, y))
 
 
 def write_hilbert_layout(df: DataFrame, path: str, z: int = 12,

@@ -128,14 +128,15 @@ def test_sliced_boundaries_have_hilbert_ids(spark):
 
 
 def test_tile_assign_derivation_matches_kernel(spark):
-    """Round-3 optimization: x/y/tile_id for z in [min_z, max_z] are
-    derived from ONE max_z computation by shifts (floor-division identity
-    + PMTiles Hilbert hierarchy). Must stay bit-identical to the NumPy
-    kernel path on random AND adversarial points (antimeridian, poles,
-    cell corners, out-of-range wrap)."""
+    """x/y/tile_id for z in [min_z, max_z] are derived from ONE max_z
+    computation by shifts (floor-division identity + PMTiles Hilbert
+    hierarchy). The Catalyst ids must stay bit-identical to the NumPy
+    kernel on random AND adversarial points (antimeridian, poles, cell
+    corners, out-of-range wrap), and x/y must equal the per-zoom floor."""
     import numpy as np
     import pandas as pd
 
+    from plateau_gis_converter_spark.functions import geo
     from plateau_gis_converter_spark.operators import tile_assign as ta
 
     rng = np.random.RandomState(3)
@@ -148,15 +149,19 @@ def test_tile_assign_derivation_matches_kernel(spark):
     df = spark.createDataFrame(pd.DataFrame({
         "lng_udeg": np.concatenate([lng, [e[0] for e in extra]]),
         "lat_udeg": np.concatenate([lat, [e[1] for e in extra]])}))
-
-    def sig(d):
-        return d.groupBy().agg(
-            F.sum("x"), F.sum("y"), F.sum("tile_id"), F.count(F.lit(1)),
-            F.sum(F.expr("x*7 + y*13 + tile_id*3 + z"))).collect()[0]
-
-    a = sig(ta.assign_point_tiles(df, 7, 15, tile_id_impl="catalyst"))
-    b = sig(ta.assign_point_tiles(df, 7, 15, tile_id_impl="arrow"))
-    assert list(a) == list(b)
+    mx = geo.mercator_mx(geo.udeg_to_deg(F.col("lng_udeg")))
+    my = geo.mercator_my(geo.udeg_to_deg(F.col("lat_udeg")))
+    got = (ta.assign_point_tiles(df, 7, 15)
+           .select("z", "x", "y", "tile_id",
+                   geo.tile_x(F.col("z"), mx).alias("fx"),
+                   geo.tile_y(F.col("z"), my).alias("fy"))
+           .toPandas())
+    assert len(got) == (n + len(extra)) * 9
+    # shifting the max_z cell == flooring at each zoom directly
+    assert got["x"].equals(got["fx"]) and got["y"].equals(got["fy"])
+    z, x, y = (got[c].to_numpy(np.int64) for c in ("z", "x", "y"))
+    want = hilbert.zxy_to_id(z, x, y).astype(np.int64)
+    np.testing.assert_array_equal(got["tile_id"].to_numpy(np.int64), want)
 
 
 def test_rasterize_points_counts_and_inverse_bounds(spark):

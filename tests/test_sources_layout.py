@@ -77,16 +77,22 @@ def test_bbox_query_parity_and_pushdown(spark, points, layouts):
 
 def test_hilbert_key_matches_tile_pipeline(spark, points):
     """The layout key IS the tile pipeline's Hilbert id (same curve, same
-    zoom) — clustering at rest aligns with the MVT writer's sort key."""
+    zoom) — clustering at rest aligns with the MVT writer's sort key.
+    Checked against the NumPy kernel on the tile of each point."""
+    import numpy as np
+
     from plateau_gis_converter_spark.functions import geo
+    from plateau_gis_converter_spark.kernels import hilbert
     from plateau_gis_converter_spark.sources import layout as lo
 
-    keyed = lo.hilbert_key(points.limit(500), z=Z)
-    t = geo.with_point_tiles(points.limit(500), F.lit(Z).cast("int"))
-    want = geo.hilbert_id_expr(t, x="x", y="y", out="tid", const_z=Z) \
-        .select("page_id", "tid")
-    joined = keyed.join(want, "page_id")
-    assert joined.where(F.col("hkey") != F.col("tid")).count() == 0
+    sample = points.limit(500)
+    keyed = geo.with_point_tiles(lo.hilbert_key(sample, z=Z),
+                                 F.lit(Z).cast("int"))
+    got = keyed.select("x", "y", "hkey").toPandas()
+    assert len(got) == 500
+    want = hilbert.zxy_to_id(Z, got["x"].to_numpy(np.int64),
+                             got["y"].to_numpy(np.int64)).astype(np.int64)
+    np.testing.assert_array_equal(got["hkey"].to_numpy(np.int64), want)
 
 
 def test_compaction_plan_bounds_and_order(spark):
