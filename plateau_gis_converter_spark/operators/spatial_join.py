@@ -13,11 +13,7 @@ Two refinement paths:
 * ``refine='catalyst'`` (default, convex rings) — the quad corners ride on
   the broadcast index as int64 columns and the inclusive PIP test is four
   integer cross-product predicates INSIDE the join condition: the whole
-  pipeline is JVM codegen, zero Python per row. ~10x the throughput of the
-  UDF path (measured: 1M pages in ~11 s on local[8] end-to-end incl. regex
-  geocode).
-* ``refine='pandas'`` — vectorized Arrow-batched UDF over the integer
-  convex kernel (exterior ring only; inclusive boundary).
+  pipeline is JVM codegen, zero Python per row.
 * ``refine='evenodd'`` (general polygons: concave exteriors, interior
   rings/holes) — exact INTEGER even-odd ray cast over ALL rings
   (kernels/pip.points_in_polygon_int), the north-star's "exact
@@ -70,21 +66,38 @@ def boundary_cell_index(records: list[dict], index_zoom: int = INDEX_ZOOM) -> li
 
 
 def _with_cells(points: DataFrame, index_zoom: int) -> DataFrame:
+    """Add the private, non-nullable probe columns: the join key ``_cell``
+    (-1 when a coordinate is NULL; index cells are >= 0, so such a point
+    never matches) and ``_lng``/``_lat`` for the PIP predicate.
+
+    There is no ``.where(isNotNull)``: Catalyst would push it, and the
+    ``isnotnull``s it infers from a nullable join key or PIP input, below
+    the caller's geocode projection and inline its aliases there, so the
+    page text would be built and regex-parsed once per filter term instead
+    of once per page. A NULL-free key and probe give it nothing to infer.
+    """
+    lng, lat = F.col("lng_udeg"), F.col("lat_udeg")
     zlit = F.lit(index_zoom)
-    mx = geo.mercator_mx(geo.udeg_to_deg(F.col("lng_udeg")))
-    my = geo.mercator_my(geo.udeg_to_deg(F.col("lat_udeg")))
-    return (points
-            .where(F.col("lng_udeg").isNotNull() & F.col("lat_udeg").isNotNull())
-            .withColumn("cell_x", geo.tile_x(zlit, mx))
-            .withColumn("cell_y", geo.tile_y(zlit, my)))
+    cell_x = geo.tile_x(zlit, geo.mercator_mx(geo.udeg_to_deg(lng)))
+    cell_y = geo.tile_y(zlit, geo.mercator_my(geo.udeg_to_deg(lat)))
+    cell = F.shiftleft(cell_x, index_zoom) + cell_y
+    return points.withColumns({
+        "_cell": F.coalesce(F.when(lng.isNotNull() & lat.isNotNull(), cell),
+                            F.lit(-1)),
+        "_lng": F.coalesce(lng, F.lit(0)),
+        "_lat": F.coalesce(lat, F.lit(0))})
+
+
+def _cell_key(r: dict, index_zoom: int) -> int:
+    return (r["cell_x"] << index_zoom) + r["cell_y"]
 
 
 def _cross_ge0(ax: str, ay: str, bx: str, by: str):
     """Edge (a->b) cross with the point, inclusive left-of-edge test for
     CCW-in-lnglat rings — identical int64 math to
     kernels/pip.points_in_convex_polygon_int."""
-    return ((F.col(bx) - F.col(ax)) * (F.col("lat_udeg") - F.col(ay))
-            - (F.col(by) - F.col(ay)) * (F.col("lng_udeg") - F.col(ax))) >= 0
+    return ((F.col(bx) - F.col(ax)) * (F.col("_lat") - F.col(ay))
+            - (F.col(by) - F.col(ay)) * (F.col("_lng") - F.col(ax))) >= 0
 
 
 def spatial_join_points(spark: SparkSession, points: DataFrame,
@@ -95,9 +108,15 @@ def spatial_join_points(spark: SparkSession, points: DataFrame,
 
     Exact inclusive integer PIP: boundary points match BOTH adjacent wards —
     deterministic and identical to the SQL oracle (fixtures.PIP_CONVEX_SQL).
+    Points with a NULL coordinate match nothing. The broadcast index is
+    deduplicated on the driver (it is tiny), which saves a Spark job.
     """
+    if refine not in ("catalyst", "evenodd"):
+        raise ValueError(f"refine must be 'catalyst' or 'evenodd', "
+                         f"got {refine!r}")
     index = boundary_cell_index(boundary_records, index_zoom)
     pts = _with_cells(points, index_zoom)
+    private = ("_cell", "_lng", "_lat")
 
     if refine == "catalyst":
         rows = []
@@ -105,71 +124,35 @@ def spatial_join_points(spark: SparkSession, points: DataFrame,
             ring = r["ring_udeg"]
             if len(ring) != 4:
                 raise ValueError("catalyst refine requires convex quads; "
-                                 "use refine='pandas' for general polygons")
-            rows.append((r["cell_x"], r["cell_y"], r["ward_code"],
+                                 "use refine='evenodd' for general polygons")
+            rows.append((_cell_key(r, index_zoom), r["ward_code"],
                          *[int(v) for xy in ring for v in xy]))
-        cells = spark.createDataFrame(rows, (
-            "cell_x: long, cell_y: long, ward_code: string, "
-            "x1: long, y1: long, x2: long, y2: long, "
-            "x3: long, y3: long, x4: long, y4: long")).dropDuplicates()
+        corners = ("x1", "y1", "x2", "y2", "x3", "y3", "x4", "y4")
+        cells = spark.createDataFrame(
+            list(dict.fromkeys(rows)),
+            "_cell: long, ward_code: string, "
+            + ", ".join(f"{c}: long" for c in corners))
         pip = (_cross_ge0("x1", "y1", "x2", "y2")
                & _cross_ge0("x2", "y2", "x3", "y3")
                & _cross_ge0("x3", "y3", "x4", "y4")
                & _cross_ge0("x4", "y4", "x1", "y1"))
-        joined = (pts.join(F.broadcast(cells), ["cell_x", "cell_y"])
-                  .where(pip)
-                  .drop("x1", "y1", "x2", "y2", "x3", "y3", "x4", "y4"))
-        return joined.drop("cell_x", "cell_y")
+        return (pts.join(F.broadcast(cells), "_cell")
+                .where(pip)
+                .drop(*private, *corners))
 
-    # general-polygon path: Arrow-batched exact PIP kernel
-    if refine not in ("pandas", "evenodd"):
-        raise ValueError(f"refine must be 'catalyst', 'pandas' or "
-                         f"'evenodd', got {refine!r}")
+    # general-polygon path: Arrow-batched exact even-odd PIP kernel
     cells = spark.createDataFrame(
-        [(r["cell_x"], r["cell_y"], r["ward_code"]) for r in index],
-        T.StructType([
-            T.StructField("cell_x", T.LongType()),
-            T.StructField("cell_y", T.LongType()),
-            T.StructField("ward_code", T.StringType()),
-        ])).dropDuplicates(["cell_x", "cell_y", "ward_code"])
-    if refine == "evenodd":
-        rings_lookup = {
-            r["ward_code"]: [np.asarray(ring, dtype=np.int64)
-                             for ring in r["rings_udeg"]]
-            for r in index}
-        pip_ok = _pip_evenodd_udf(rings_lookup)
-    else:
-        ring_lookup = {
-            r["ward_code"]: np.asarray(r["ring_udeg"], dtype=np.int64)
-            for r in index}
-        pip_ok = _pip_refine_udf(ring_lookup)
-    joined = (pts.join(F.broadcast(cells), ["cell_x", "cell_y"])
-              .where(pip_ok(F.col("ward_code"), F.col("lng_udeg"),
-                            F.col("lat_udeg"))))
-    return joined.drop("cell_x", "cell_y")
-
-
-def _pip_refine_udf(ring_lookup: dict):
-    """Vectorized PIP per candidate pair, grouped per ward within each Arrow
-    batch (general polygons; kernels/pip handles holes via ray casting)."""
-
-    @pandas_udf(T.BooleanType())
-    def pip_ok(ward_code: pd.Series, lng_udeg: pd.Series,
-               lat_udeg: pd.Series) -> pd.Series:
-        out = np.zeros(len(ward_code), dtype=bool)
-        lng = lng_udeg.to_numpy(np.int64)
-        lat = lat_udeg.to_numpy(np.int64)
-        codes = ward_code.to_numpy()
-        for code in pd.unique(codes):
-            ring = ring_lookup.get(code)
-            if ring is None:
-                continue
-            m = codes == code
-            out[m] = pip_kernel.points_in_convex_polygon_int(
-                lng[m], lat[m], ring)
-        return pd.Series(out)
-
-    return pip_ok
+        list(dict.fromkeys((_cell_key(r, index_zoom), r["ward_code"])
+                           for r in index)),
+        "_cell: long, ward_code: string")
+    rings_lookup = {
+        r["ward_code"]: [np.asarray(ring, dtype=np.int64)
+                         for ring in r["rings_udeg"]]
+        for r in index}
+    pip_ok = _pip_evenodd_udf(rings_lookup)
+    return (pts.join(F.broadcast(cells), "_cell")
+            .where(pip_ok(F.col("ward_code"), F.col("_lng"), F.col("_lat")))
+            .drop(*private))
 
 
 def _pip_evenodd_udf(rings_lookup: dict):

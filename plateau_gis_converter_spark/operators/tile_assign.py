@@ -42,11 +42,8 @@ def assign_point_tiles(df: DataFrame, min_z: int = 7, max_z: int = 15,
     ZOOM_RANGE.resolve({"min_z": min_z, "max_z": max_z})
     mx = geo.mercator_mx(geo.udeg_to_deg(F.col("lng_udeg")))
     my = geo.mercator_my(geo.udeg_to_deg(F.col("lat_udeg")))
-    base = (df
-            .where(F.col("lng_udeg").isNotNull()
-                   & F.col("lat_udeg").isNotNull())
-            .withColumns({"_xm": geo.tile_x(F.lit(max_z), mx),
-                          "_ym": geo.tile_y(F.lit(max_z), my)}))
+    base = df.withColumns({"_xm": geo.tile_x(F.lit(max_z), mx),
+                           "_ym": geo.tile_y(F.lit(max_z), my)})
     # Derive every zoom from the max_z coordinates by shifts instead of
     # re-flooring the mercator per zoom: x_z = x_maxz >> (max_z - z) is
     # exact (floor(floor(a)/2^k) == floor(a/2^k)), and the antimeridian
@@ -64,8 +61,16 @@ def assign_point_tiles(df: DataFrame, min_z: int = 7, max_z: int = 15,
         zoomed["tile_id"] = F.expr(
             f"((cast(1 as bigint) << (2 * z)) - 1) div 3 + "
             f"shiftright(_tidm - {acc_maxz}L, 2 * ({max_z} - z))")
+    # A page with a NULL coordinate explodes a NULL zoom list into no rows.
+    # There is no .where(isNotNull): Catalyst would push it below the
+    # caller's geocode projection and inline its aliases, re-parsing the page
+    # text per filter term. It infers no filter from a Generate whose input
+    # is not a bare attribute, so this one stays above the projection.
+    zooms = F.when(F.col("lng_udeg").isNotNull()
+                   & F.col("lat_udeg").isNotNull(),
+                   F.sequence(F.lit(min_z), F.lit(max_z)))
     return (base
-            .withColumn("z", F.explode(F.sequence(F.lit(min_z), F.lit(max_z))))
+            .withColumn("z", F.explode(zooms))
             .withColumns(zoomed)
             .drop("_xm", "_ym", "_tidm"))
 

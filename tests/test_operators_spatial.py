@@ -3,6 +3,7 @@ against slow scalar oracles (FIXTURES.md §3 golden strategy)."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from plateau_gis_converter_spark.kernels import hilbert, pip
 from plateau_gis_converter_spark.kernels.mercator import lnglat_to_web_mercator
@@ -91,6 +92,88 @@ def test_spatial_join_plan_is_broadcast(spark, pages_df):
     plan = joined._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def _inplan_pages(spark, n):
+    """Pages whose text is built in the plan, as the benchmark's are."""
+    from plateau_gis_converter_spark.functions import geo
+
+    base = spark.range(0, n).select(F.col("id").alias("doc_id"))
+    lng, lat = geo.point_udeg_cols(F.col("doc_id"))
+    return base.select(
+        "doc_id",
+        F.format_string("地点 lat_udeg=%d lng_udeg=%d 東京", lat, lng)
+        .alias("text"))
+
+
+def _geocoded_consumers(spark, pts):
+    return {
+        "join_catalyst": spatial_join.spatial_join_points(
+            spark, pts, fx.tessellation_records()),
+        "join_evenodd": spatial_join.spatial_join_points(
+            spark, pts, fx.holed_records(), refine="evenodd"),
+        "tiles": tile_assign.assign_point_tiles(pts, 7, 15),
+        "tiles_no_id": tile_assign.assign_point_tiles(
+            pts, 7, 15, with_tile_id=False),
+    }
+
+
+def test_geocode_filters_stay_above_geocode(spark):
+    """No optimized-plan Filter may re-run the geocode: a null filter pushed
+    below geocode_expr's projection inlines its aliases, so each page's text
+    would be built and regex-parsed again per filter term."""
+    pts = geocode.geocode_expr(_inplan_pages(spark, 100))
+    for name, df in _geocoded_consumers(spark, pts).items():
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        filters = [ln.lstrip(" :+-") for ln in plan.splitlines()
+                   if ln.lstrip(" :+-").startswith("Filter")]
+        bad = [f for f in filters
+               if "regexp_extract" in f or "format_string" in f]
+        assert not bad, f"{name}: geocode inlined into {bad[0][:200]}"
+
+
+def test_null_coordinates_yield_no_join_or_tile_rows(spark):
+    """Pages without both coordinates match no ward on either refine path
+    and get no tiles; a valid page in the same input still does."""
+    lng_ok, lat_ok = 139_670_000, 35_660_000  # in the donut, not its hole
+    texts = ["no coordinates", "lat_udeg=35660000", "lng_udeg=139670000",
+             f"lat_udeg={lat_ok} lng_udeg={lng_ok}"]
+    pts = geocode.geocode_expr(spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"))
+    one_lng, one_lat = np.array([lng_ok]), np.array([lat_ok])
+    for refine, recs, inside in [
+            ("catalyst", fx.tessellation_records(),
+             lambda rings: pip.points_in_convex_polygon_int(
+                 one_lng, one_lat, np.asarray(rings[0]))),
+            ("evenodd", fx.holed_records(),
+             lambda rings: pip.points_in_polygon_int(
+                 one_lng, one_lat, [np.asarray(r) for r in rings]))]:
+        got = {(r["doc_id"], r["ward_code"]) for r in
+               spatial_join.spatial_join_points(spark, pts, recs,
+                                                refine=refine).collect()}
+        want = {(3, rec["ward_code"]) for rec in recs
+                if inside(rec["rings_udeg"])[0]}
+        assert want and got == want, refine
+    tiles = tile_assign.assign_point_tiles(pts, 7, 15).collect()
+    assert sorted((r["doc_id"], r["z"]) for r in tiles) == [
+        (3, z) for z in range(7, 16)]
+
+
+def test_geocoded_consumer_schemas(spark):
+    """Output names, types and nullability are the operators' contract:
+    lng_udeg/lat_udeg stay nullable and no private probe column leaks."""
+    pts = geocode.geocode_expr(_inplan_pages(spark, 10))
+    head = ("doc_id bigint not null, text string not null, "
+            "lat_udeg bigint, lng_udeg bigint")
+    tiles = "z int not null, x bigint, y bigint not null"
+    want = {
+        "join_catalyst": f"{head}, ward_code string",
+        "join_evenodd": f"{head}, ward_code string",
+        "tiles": f"{head}, {tiles}, tile_id bigint",
+        "tiles_no_id": f"{head}, {tiles}",
+    }
+    for name, df in _geocoded_consumers(spark, pts).items():
+        assert df.schema == T.StructType.fromDDL(want[name]), name
 
 
 def test_boundary_slicing_covers_point_tiles(spark, pages_df):
