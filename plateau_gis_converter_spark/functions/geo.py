@@ -120,16 +120,6 @@ def hilbert_id_expr(z: int, x: Column, y: Column) -> Column:
     return tid
 
 
-def salted_key(key: Column, salt_buckets: int, salt_source: Column) -> Column:
-    """Skew-salting helper: append a deterministic salt in [0, salt_buckets)
-    derived from another column (e.g. hash(url)) so a hot key (dense Tokyo
-    cell) spreads over `salt_buckets` shuffle partitions.
-    SURVEY §4 skew-handling row; the reference has no mitigation (warns at
-    200k features/tile, nusamai/src/sink/mvt/mod.rs:296-301)."""
-    salt = F.pmod(F.hash(salt_source), F.lit(salt_buckets))
-    return F.concat_ws("#", key.cast("string"), salt.cast("string"))
-
-
 def point_udeg_cols(id_col: Column) -> tuple[Column, Column]:
     """Catalyst version of fixtures.point_udeg_np — derives the deterministic
     (lng_µdeg, lat_µdeg) pair from an integer id. Same integer arithmetic as

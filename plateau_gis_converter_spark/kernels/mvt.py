@@ -61,14 +61,6 @@ def feature_id_hash(s: str) -> int:
     return a
 
 
-def feature_id_hash_np(ids) -> np.ndarray:
-    """Vectorized djb2-variant over an object array of strings."""
-    out = np.empty(len(ids), dtype=np.uint64)
-    for i, s in enumerate(ids):
-        out[i] = feature_id_hash(s)
-    return out
-
-
 class GeometryEncoder:
     """MVT geometry command encoder (geometry.rs:10-64)."""
 

@@ -44,11 +44,6 @@ def mvt_tile_at(z, lng, lat):
     return x, y
 
 
-def mvt_parent(z, x, y):
-    """Square-scheme parent tile (z-1, x//2, y//2)."""
-    return z - 1, x // 2, y // 2
-
-
 # ----------------------------------------------------------------------------
 # Reference 3D-Tiles scheme (non-square, pole-widened x_step)
 # ----------------------------------------------------------------------------

@@ -3,23 +3,17 @@
 This is the engine's counterpart to the reference's CityGML geometry parse
 (``nusamai/src/source/citygml.rs:107-129``) re-targeted at Common-Crawl-style
 web pages (SURVEY §7.1): a deterministic rule-based extractor so goldens are
-stable, implemented as vectorized **pandas string ops over Arrow batches**
-(no per-row Python, per BASELINE.json input_hint).
+stable.
 
-Two implementations with identical semantics:
-* ``geocode_expr`` — pure Catalyst ``regexp_extract`` (JVM fast path; used by
-  default).
-* ``geocode_pandas`` — Arrow-batched pandas UDF (`.str.extract`), kept as the
-  extension template for extractors that outgrow regexp (e.g. address
-  dictionaries); exercised by tests to assert parity with geocode_expr.
+One implementation: ``geocode_expr``, pure Catalyst ``regexp_extract`` (JVM
+codegen, no Python per row); batch and streaming plans share it. The
+Arrow-batched pandas extractor in the tests is its parity reference.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 LAT_PATTERN = r"lat_udeg=(-?\d+)"
 LNG_PATTERN = r"lng_udeg=(-?\d+)"
@@ -33,23 +27,3 @@ def geocode_expr(df: DataFrame, text_col: str = "text") -> DataFrame:
     return (df
             .withColumn("lat_udeg", F.when(lat_s != "", lat_s.cast("bigint")))
             .withColumn("lng_udeg", F.when(lng_s != "", lng_s.cast("bigint"))))
-
-
-@pandas_udf(T.StructType([
-    T.StructField("lng_udeg", T.LongType()),
-    T.StructField("lat_udeg", T.LongType()),
-]))
-def _geocode_udf(text):
-    import pandas as pd
-
-    lat = text.str.extract(LAT_PATTERN, expand=False).astype("Int64")
-    lng = text.str.extract(LNG_PATTERN, expand=False).astype("Int64")
-    return pd.DataFrame({"lng_udeg": lng, "lat_udeg": lat})
-
-
-def geocode_pandas(df: DataFrame, text_col: str = "text") -> DataFrame:
-    pt = _geocode_udf(F.col(text_col))
-    return (df.withColumn("_pt", pt)
-              .withColumn("lng_udeg", F.col("_pt.lng_udeg"))
-              .withColumn("lat_udeg", F.col("_pt.lat_udeg"))
-              .drop("_pt"))

@@ -35,16 +35,8 @@ caps plan growth.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Trim layers peeled per materialized round in scc_labels' Trim phase
-# (see _scc_trim): >1 amortizes per-job overhead over several layers.
-# Env-overridable so cluster deployments can re-tune; measured A/B on the
-# sf0.1 gate picked the default below.
-_SCC_TRIM_LAYERS_DEFAULT = 1
 
 BASE_PPM = 1_000_000
 
@@ -261,45 +253,20 @@ def synthetic_link_edges(docs: DataFrame, n: int) -> DataFrame:
     return e.where(F.col("src") != F.col("dst")).distinct()
 
 
-def _cc_propagation(und: DataFrame, max_iters: int):
-    """Synchronous min-label propagation: O(component diameter) rounds.
-    Returns (labels(id, label), rounds, converged)."""
-    labels = (und.select(F.col("a").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
-              .localCheckpoint())
-    # convergence via the label-mass invariant: labels are non-increasing
-    # per node, so sum(label) is strictly decreasing until the fixpoint —
-    # one cheap aggregate per round instead of an old⋈new change-count join
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for i in range(max_iters):
-        neigh = (und.join(labels, und["b"] == labels["id"])
-                 .groupBy("a").agg(F.min("label").alias("nmin")))
-        labels = (labels.join(neigh, labels["id"] == neigh["a"], "left")
-                  .select("id",
-                          F.least(F.col("label"),
-                                  F.coalesce(F.col("nmin"), F.col("label")))
-                          .alias("label"))
-                  .localCheckpoint())
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            return labels, i + 1, True
-        prev_sum = cur_sum
-    return labels, max_iters, False
-
-
-def _large_star(e: DataFrame, dedupe: bool = True) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     """Kiveris et al. 2014 large-star: for each node u, attach every
     STRICTLY LARGER neighbor v to m = min(Gamma(u) + {u}). Input edges
     must be DISTINCT and (larger, smaller)-oriented — then the
     symmetrized union is dup-free by construction (no distinct needed
     on it, one shuffle saved per round); output is (larger, smaller).
 
-    ``dedupe=False`` skips the output ``distinct()`` (VERDICT r4 #9):
-    duplicate edges are SEMANTICALLY harmless downstream — small-star's
-    groupBy-min ignores multiplicity and its own final distinct restores
-    the dup-free invariant each round — so the only cost is join fan-out
-    vs the saved shuffle. Measured on the bench fixture (see
-    NOTES_r5.md) and kept as the default that measured faster."""
+    The output is NOT deduplicated (VERDICT r4 #9): duplicate edges are
+    semantically harmless downstream — small-star's groupBy-min ignores
+    multiplicity and its own final distinct restores the dup-free
+    invariant each round — so the only cost is join fan-out vs the saved
+    shuffle. On the sf0.1 bench fixture the round without the extra
+    distinct was faster in every paired rep (floors 2.6 s vs 3.7 s;
+    NOTES_r5.md)."""
     sym = e.unionAll(e.select(F.col("v").alias("u"),
                               F.col("u").alias("v")))
     mins = (sym.groupBy("u").agg(F.min("v").alias("mv"))
@@ -307,7 +274,7 @@ def _large_star(e: DataFrame, dedupe: bool = True) -> DataFrame:
     out = (sym.join(mins, "u")
            .where(F.col("v") > F.col("u"))
            .select(F.col("v").alias("u"), F.col("m").alias("v")))
-    return out.distinct() if dedupe else out
+    return out
 
 
 def _small_star(e: DataFrame) -> DataFrame:
@@ -322,8 +289,7 @@ def _small_star(e: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _cc_alternating(und: DataFrame, max_iters: int,
-                    intermediate_distinct: bool = False):
+def _cc_alternating(und: DataFrame, max_iters: int):
     """Alternating large-star/small-star (Kiveris et al. 2014,
     "Connected Components in MapReduce and Beyond"): converges in
     O(log^2 n) rounds — in practice a handful — versus O(diameter) for
@@ -337,13 +303,6 @@ def _cc_alternating(und: DataFrame, max_iters: int,
     to themselves is exactly the min-label CC labeling, so a premature
     stall cannot return wrong labels.
 
-    ``intermediate_distinct=False`` (default, VERDICT r4 #9): the
-    large-star output feeds small-star WITHOUT its own distinct — one
-    shuffle saved per round; small-star's trailing distinct restores the
-    dup-free invariant, so the per-round stall stats and results are
-    identical (pytest + measured parity). On the sf0.1 bench fixture the
-    trimmed round was faster in every paired rep (floors 2.6 s vs 3.7 s;
-    see NOTES_r5.md).
     Returns (labels(id, label), rounds, converged)."""
     nodes = und.select(F.col("a").alias("id")).distinct().localCheckpoint()
     # oriented (larger, smaller) distinct edges — _large_star's required
@@ -352,8 +311,7 @@ def _cc_alternating(und: DataFrame, max_iters: int,
          .select(F.col("a").alias("u"), F.col("b").alias("v")))
     prev = None
     for i in range(max_iters):
-        e = _small_star(_large_star(
-            e, dedupe=intermediate_distinct)).localCheckpoint(eager=False)
+        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
         # cheap stall TRIGGER: one aggregate over the edge set (labels
         # only decrease, so these stats stall at the fixpoint). The
         # trigger may rarely fire early — harmless, because the sound
@@ -380,8 +338,7 @@ def _cc_alternating(und: DataFrame, max_iters: int,
 
 def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                          b_col: str = "doc_b",
-                         max_iters: int = 50,
-                         algorithm: str = "alternating") -> DataFrame:
+                         max_iters: int = 50) -> DataFrame:
     """Resolve near-duplicate PAIRS into clusters. Output
     (id, component_id) for every node that appears in a pair;
     component_id = the smallest node id in the component (the canonical
@@ -391,32 +348,24 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     embedding near-dup) and an actually deduplicated corpus (see
     ``dedup_keep_list``).
 
-    algorithm:
-      * ``"alternating"`` (default) — large-star/small-star, O(log^2 n)
-        rounds, the trillion-edge scale path;
-      * ``"propagation"`` — one-hop min-label propagation, O(diameter)
-        rounds; fine for shallow near-dup clusters and kept as the
-        independent cross-check implementation.
+    Alternating large-star/small-star, O(log^2 n) rounds (the
+    trillion-edge scale path); the one-hop min-label propagation
+    cross-check lives in the tests.
 
     Raises RuntimeError if ``max_iters`` is exhausted before the fixpoint
     (ADVICE r3: silently-unconverged labels would keep the wrong
     canonical docs with no signal). Mirrors the kNN ``exact=false``
     pattern but hard-fails: a partial CC labeling has no safe use.
     """
-    if algorithm not in ("alternating", "propagation"):
-        # ADVICE r4: a typo must not silently select the O(diameter) path
-        raise ValueError(f"algorithm must be 'alternating' or "
-                         f"'propagation', got {algorithm!r}")
     und = (pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
            .unionAll(pairs.select(F.col(b_col).alias("a"),
                                   F.col(a_col).alias("b")))
            .distinct()
            .localCheckpoint())
-    fn = _cc_alternating if algorithm == "alternating" else _cc_propagation
-    labels, rounds, converged = fn(und, max_iters)
+    labels, rounds, converged = _cc_alternating(und, max_iters)
     if not converged:
         raise RuntimeError(
-            f"connected_components({algorithm}) did not converge in "
+            f"connected_components did not converge in "
             f"{rounds} rounds (max_iters={max_iters}); labels would be "
             f"silently wrong — raise max_iters")
     return labels.select("id", F.col("label").alias("component_id"))
@@ -865,8 +814,7 @@ def _directed_min_reach(nodes: DataFrame, edges: DataFrame,
     return labels, False
 
 
-def _scc_trim(remaining: DataFrame, e: DataFrame, max_rounds: int,
-              layers: int = 1):
+def _scc_trim(remaining: DataFrame, e: DataFrame, max_rounds: int):
     """FW-BW-Trim's Trim phase: a node with no in-edge or no out-edge in
     the remaining subgraph cannot lie on a directed cycle, so it is a
     singleton SCC — peel such nodes iteratively (removing one layer
@@ -885,39 +833,32 @@ def _scc_trim(remaining: DataFrame, e: DataFrame, max_rounds: int,
     on the degree probes is dropped — left-semi joins ignore right-side
     multiplicity. Identical output relations.
 
-    ``layers`` > 1 peels that many layers per MATERIALIZED round (the
-    keep-set of layer j is the lazy input of layer j+1; only the last
-    layer is checkpointed and counted): per-job fixed overhead is paid
-    once per block instead of once per layer, and the two references to
-    the intermediate keep-set (src / dst restriction) are identical
-    subtrees that the engine's exchange reuse dedupes. The fixpoint
-    test (block removed nothing => every layer removed nothing, by
-    monotonicity) and the trimmed/remaining relations are unchanged."""
+    One layer per materialized round: peeling 2 or 3 layers lazily per
+    round measured 1.1x / 1.4x slower on the sf0.1 gate, because under
+    AQE the job count tracks exchanges, not driver actions
+    (OPTIMIZATION_r06.md)."""
     trimmed = None
     n_rem = remaining.count()
-    for _ in range(max(1, (max_rounds + layers - 1) // layers)):
+    for _ in range(max(1, max_rounds)):
         if n_rem == 0:
             break
-        cur = remaining
-        for _ in range(layers):
-            rs = cur.select(F.col("id").alias("src"))
-            rd = cur.select(F.col("id").alias("dst"))
-            e_k = (e.join(rs, "src", "left_semi")
-                   .join(rd, "dst", "left_semi"))
-            # both-degree probe as ONE flag aggregation over the
-            # restricted edge endpoints (endpoints are ⊆ remaining by
-            # construction, so no join back to remaining is needed) —
-            # one shuffle instead of two semi-join probes
-            flags = (e_k.select(F.col("src").alias("id"),
-                                F.lit(1).alias("o"), F.lit(0).alias("i"))
-                     .unionAll(e_k.select(F.col("dst").alias("id"),
-                                          F.lit(0).alias("o"),
-                                          F.lit(1).alias("i")))
-                     .groupBy("id").agg(F.max("o").alias("o"),
-                                        F.max("i").alias("i")))
-            cur = (flags.where((F.col("o") == 1) & (F.col("i") == 1))
-                   .select("id"))
-        keep = cur.localCheckpoint(eager=False)
+        rs = remaining.select(F.col("id").alias("src"))
+        rd = remaining.select(F.col("id").alias("dst"))
+        e_k = (e.join(rs, "src", "left_semi")
+               .join(rd, "dst", "left_semi"))
+        # both-degree probe as ONE flag aggregation over the restricted
+        # edge endpoints (endpoints are ⊆ remaining by construction, so
+        # no join back to remaining is needed) — one shuffle instead of
+        # two semi-join probes
+        flags = (e_k.select(F.col("src").alias("id"),
+                            F.lit(1).alias("o"), F.lit(0).alias("i"))
+                 .unionAll(e_k.select(F.col("dst").alias("id"),
+                                      F.lit(0).alias("o"),
+                                      F.lit(1).alias("i")))
+                 .groupBy("id").agg(F.max("o").alias("o"),
+                                    F.max("i").alias("i")))
+        keep = (flags.where((F.col("o") == 1) & (F.col("i") == 1))
+                .select("id").localCheckpoint(eager=False))
         n_keep = keep.count()
         if n_keep == n_rem:
             break
@@ -940,8 +881,7 @@ def _scc_trim(remaining: DataFrame, e: DataFrame, max_rounds: int,
 
 def scc_labels(nodes: DataFrame, edges: DataFrame,
                max_peels: int = 10, max_prop_rounds: int = 60,
-               max_trim_rounds: int = 40,
-               trim_layers: int | None = None) -> DataFrame:
+               max_trim_rounds: int = 40) -> DataFrame:
     """Strongly connected components of a DIRECTED graph — the web-graph
     primitive behind the bowtie structure study (Broder et al. WWW'00:
     SCC core vs IN/OUT tendrils), link-ring/spam-farm detection (a link
@@ -991,12 +931,8 @@ def scc_labels(nodes: DataFrame, edges: DataFrame,
             return new
         return acc.unionByName(new)
 
-    if trim_layers is None:
-        trim_layers = int(os.environ.get("SPARK_GRAFT_SCC_TRIM_LAYERS",
-                                         _SCC_TRIM_LAYERS_DEFAULT))
     for _ in range(max_peels):
-        t, remaining, e = _scc_trim(remaining, e, max_trim_rounds,
-                                    layers=trim_layers)
+        t, remaining, e = _scc_trim(remaining, e, max_trim_rounds)
         done = _acc(done, t)
         if remaining.isEmpty():
             return done.select("id", "scc_id")

@@ -99,12 +99,6 @@ def html_extract_text_pandas(df: DataFrame, html_col: str = "html",
     return df.withColumn(out_col, _extract(F.col(html_col)))
 
 
-def with_extracted_text(df: DataFrame, html_col: str = "html",
-                        out_col: str = "text_extracted") -> DataFrame:
-    """Catalyst-path convenience wrapper."""
-    return df.withColumn(out_col, html_extract_text(F.col(html_col)))
-
-
 def html_tag_depth(df: DataFrame, html_col: str = "html",
                    out_col: str = "max_depth") -> DataFrame:
     """Maximum tag-nesting depth per page — the classic DOM-complexity /

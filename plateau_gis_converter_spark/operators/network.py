@@ -13,10 +13,12 @@ engine shape applies:
 * distinct prefix lengths are BOUNDED (<= 33 for IPv4), so the join
   decomposes into one broadcast HASH probe per length present, chained as
   LEFT joins and folded longest-first with ``coalesce`` -- ZERO shuffle,
-  zero row fan-out, one codegen stage over the fact scan.  All probes
-  share ONE build relation over the whole prefix table (keys pre-shifted
-  by each row's own plen; the probe's equi-key carries the length)
-  instead of one filtered slice per length.  The alternative
+  zero row fan-out, one codegen stage over the fact scan.  Every probe
+  is written against the same pre-shifted build relation (keys shifted by
+  each row's own plen; the probe's equi-key carries the length), but
+  Catalyst pushes each probe's ``_plen = p`` into its build side, so the
+  physical plan has one filtered BroadcastExchange per length present
+  (no ReusedExchange; plans/r06/cidr_lpm_after.txt).  The alternative
   (explode each row into one candidate per length, one join, then a
   max-plen re-aggregate) pays a |plens|x intermediate AND a groupBy
   shuffle for nothing.
@@ -68,15 +70,14 @@ def lpm_join(df: DataFrame, prefixes: DataFrame, ip_col: str = "ip",
         raise ValueError("prefixes contain out-of-range or misaligned "
                          "entries (host bits set below the mask)")
     plens = sorted((r["plen"] for r in chk), reverse=True)
-    # r6 OPTIMIZATION (measured 3.1 -> 2.7 s floor on the sf0.1 gate
-    # interleaved A/B, identical rows, 17 -> 15 jobs): every per-length
-    # probe now joins the SAME build relation — keys pre-shifted per row
-    # by the row's own plen, the probe adds `_plen == <p>` to the
-    # equi-key — instead of one filtered+projected slice per length, and
-    # the per-join build subtrees are identical up to alias so the
-    # engine can dedupe their materialization. The probe stays a pure
-    # broadcast hash lookup per length (composite key), zero shuffle,
-    # zero fan-out.
+    # Every per-length probe joins the same pre-shifted relation with
+    # `_plen == <p>` in its equi-key. The optimizer pushes that equality
+    # into each build side, so each length broadcasts its own filtered
+    # slice; the probe is a pure broadcast hash lookup per length, zero
+    # shuffle, zero fan-out. (r6 measured 3.1 -> 2.7 s on the sf0.1 gate,
+    # 17 -> 15 jobs; the plan shows no shared build, so per ADVICE r6 the
+    # saving is the validation and plens collect folded into one
+    # aggregate above.)
     dim = prefixes.select(
         F.expr("CASE WHEN plen = 32 THEN CAST(net AS BIGINT) "
                "ELSE shiftrightunsigned(CAST(net AS BIGINT), 32 - plen) "

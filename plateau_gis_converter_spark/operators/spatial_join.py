@@ -8,16 +8,20 @@ contains only the cell equality plus (for the convex path) integer
 cross-product predicates, so Catalyst always plans a BroadcastHashJoin —
 never a nested loop.
 
-Two refinement paths:
+The refinement is chosen from the polygon side itself, once per call on the
+driver (in the spirit of the data-driven path choice of *Parallel Spatial
+Join Processing with Adaptive Replication*, EDBT 2025):
 
-* ``refine='catalyst'`` (default, convex rings) — the quad corners ride on
-  the broadcast index as int64 columns and the inclusive PIP test is four
+* every record is one ring of 4 vertices that is convex and CCW in
+  (lng, lat) (``_is_convex_ccw_quad``) — the quad corners ride on the
+  broadcast index as int64 columns and the inclusive PIP test is four
   integer cross-product predicates INSIDE the join condition: the whole
-  pipeline is JVM codegen, zero Python per row.
-* ``refine='evenodd'`` (general polygons: concave exteriors, interior
+  pipeline is JVM codegen, zero Python per row;
+* otherwise (concave or clockwise exteriors, more vertices, interior
   rings/holes) — exact INTEGER even-odd ray cast over ALL rings
   (kernels/pip.points_in_polygon_int), the north-star's "exact
-  ray-casting point-in-polygon refinement"; oracle-expressible bit-for-bit.
+  ray-casting point-in-polygon refinement"; oracle-expressible
+  bit-for-bit.
 
 At 100 TB: scan (pruned to url+text) → geocode → cell (codegen) →
 BroadcastHashJoin (polygon cell index stays tiny even nationwide) → filter.
@@ -47,20 +51,22 @@ INDEX_ZOOM = 12
 def boundary_cell_index(records: list[dict], index_zoom: int = INDEX_ZOOM) -> list[dict]:
     """Covering-cell index of the polygon side, computed with the exact
     slicing kernel (buffered, so it over-covers: a superset of all cells any
-    interior point can fall in — candidate recall is 100%)."""
+    interior point can fall in — candidate recall is 100%). The slicer
+    culls back-facing exteriors, so a polygon given the other way round is
+    reversed first: containment does not depend on winding."""
     out = []
     for rec in records:
         mercator_rings = rings_udeg_to_mercator(rec["rings_udeg"])
+        if not clip_kernel.ring_is_cw(mercator_rings[0]):
+            mercator_rings = [ring[::-1] for ring in mercator_rings]
         tiled = clip_kernel.slice_multipolygon(
             [mercator_rings], index_zoom, index_zoom)
         for (_, x, y) in tiled.keys():
             out.append({
                 "cell_x": int(x), "cell_y": int(y),
                 "ward_code": rec["ward_code"],
-                "ring_udeg": [[int(c[0]), int(c[1])] for c in rec["rings_udeg"][0]],
                 "rings_udeg": [[[int(c[0]), int(c[1])] for c in ring]
                                for ring in rec["rings_udeg"]],
-                "n_rings": len(rec["rings_udeg"]),
             })
     return out
 
@@ -100,33 +106,39 @@ def _cross_ge0(ax: str, ay: str, bx: str, by: str):
             - (F.col(by) - F.col(ay)) * (F.col("_lng") - F.col(ax))) >= 0
 
 
+def _is_convex_ccw_quad(rings_udeg) -> bool:
+    """One ring of 4 vertices whose every turn is left or straight (exact
+    integer cross products >= 0) and whose area is positive: exactly the
+    rings on which the four inclusive edge predicates are the polygon."""
+    if len(rings_udeg) != 1 or len(rings_udeg[0]) != 4:
+        return False
+    ring = [(int(x), int(y)) for x, y in rings_udeg[0]]
+    turns = [(bx - ax) * (cy - by) - (by - ay) * (cx - bx)
+             for (ax, ay), (bx, by), (cx, cy)
+             in zip(ring, ring[1:] + ring[:1], ring[2:] + ring[:2])]
+    return min(turns) >= 0 and max(turns) > 0
+
+
 def spatial_join_points(spark: SparkSession, points: DataFrame,
                         boundary_records: list[dict],
-                        index_zoom: int = INDEX_ZOOM,
-                        refine: str = "catalyst") -> DataFrame:
-    """points(lng_udeg, lat_udeg, ...) ⋈ convex boundary quads → + ward_code.
+                        index_zoom: int = INDEX_ZOOM) -> DataFrame:
+    """points(lng_udeg, lat_udeg, ...) ⋈ boundary polygons → + ward_code.
 
-    Exact inclusive integer PIP: boundary points match BOTH adjacent wards —
-    deterministic and identical to the SQL oracle (fixtures.PIP_CONVEX_SQL).
-    Points with a NULL coordinate match nothing. The broadcast index is
-    deduplicated on the driver (it is tiny), which saves a Spark job.
+    Exact integer PIP. On convex CCW quads the test is inclusive: boundary
+    points match BOTH adjacent wards — deterministic and identical to the
+    SQL oracle (fixtures.PIP_CONVEX_SQL). Any other polygon set takes the
+    even-odd kernel. Points with a NULL coordinate match nothing. The
+    broadcast index is deduplicated on the driver (it is tiny), which
+    saves a Spark job.
     """
-    if refine not in ("catalyst", "evenodd"):
-        raise ValueError(f"refine must be 'catalyst' or 'evenodd', "
-                         f"got {refine!r}")
     index = boundary_cell_index(boundary_records, index_zoom)
     pts = _with_cells(points, index_zoom)
     private = ("_cell", "_lng", "_lat")
 
-    if refine == "catalyst":
-        rows = []
-        for r in index:
-            ring = r["ring_udeg"]
-            if len(ring) != 4:
-                raise ValueError("catalyst refine requires convex quads; "
-                                 "use refine='evenodd' for general polygons")
-            rows.append((_cell_key(r, index_zoom), r["ward_code"],
-                         *[int(v) for xy in ring for v in xy]))
+    if all(_is_convex_ccw_quad(rec["rings_udeg"]) for rec in boundary_records):
+        rows = [(_cell_key(r, index_zoom), r["ward_code"],
+                 *[v for xy in r["rings_udeg"][0] for v in xy])
+                for r in index]
         corners = ("x1", "y1", "x2", "y2", "x3", "y3", "x4", "y4")
         cells = spark.createDataFrame(
             list(dict.fromkeys(rows)),
@@ -140,7 +152,7 @@ def spatial_join_points(spark: SparkSession, points: DataFrame,
                 .where(pip)
                 .drop(*private, *corners))
 
-    # general-polygon path: Arrow-batched exact even-odd PIP kernel
+    # general polygons: Arrow-batched exact even-odd PIP kernel
     cells = spark.createDataFrame(
         list(dict.fromkeys((_cell_key(r, index_zoom), r["ward_code"])
                            for r in index)),

@@ -19,7 +19,6 @@ The synthetic geo layer derives deterministic points from documents.doc_id
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -49,19 +48,43 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     par = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(par // 2, 2):
-        if os.environ.get("SPARK_GRAFT_T_RR") == "1":
-            df = df.repartition(par)
-        else:
-            # r6 OPTIMIZATION: hash-repartition on the table's leading
-            # (key) column instead of round-robin — a keyless
-            # repartition(n) first pays a local SORT of its input so
-            # retried tasks reproduce the same row placement
-            # (SPARK-23207, guide §2.5); hashing a deterministic key
-            # needs no sort and is retry-stable. Results are
-            # partitioning-independent (house rule; gates are
-            # order-insensitive).
-            df = df.repartition(par, F.col(df.columns[0]))
+        # Round-robin, not a hash on the leading key column: in a
+        # same-session ABBA A/B over the 249 bench.py leaves (sf0.01,
+        # local[4], floor of 2 passes) round-robin's geomean leaf floor
+        # was 0.93x and 0.99x of hash's, against 0.97-1.04x between runs
+        # of one mode, and a hash key would also widen every scan's
+        # ReadSchema by that column.
+        df = df.repartition(par)
     return df
+
+
+# State-store partitions for the streaming gates. The count is fixed into
+# each streaming checkpoint when it is created, and every state partition
+# pays store instantiation plus per-batch commit I/O: at 32 partitions the
+# stream-stream join measured 6.5 s vs 2.5 s at 8 on the same data (r6;
+# 1.3-2.7x on 7 of the 9 gates). 8 fits the gate micro-batches (~12.5k
+# rows per partition). A real stream sizes it as state bytes / 100-200 MB
+# per partition, chosen before its first checkpoint.
+_STREAM_SHUFFLE_PARTITIONS = 8
+
+
+def _with_stream_state_conf(fn):
+    """Run a streaming gate with ``_STREAM_SHUFFLE_PARTITIONS`` shuffle
+    partitions instead of the batch setting; the conf is restored
+    afterwards, so batch queries are untouched. The emitted rows are
+    partition-independent — the oracle gates prove it."""
+    import functools
+
+    @functools.wraps(fn)
+    def wrapped(spark, sf_dir):
+        key = "spark.sql.shuffle.partitions"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(_STREAM_SHUFFLE_PARTITIONS))
+        try:
+            return fn(spark, sf_dir)
+        finally:
+            spark.conf.set(key, old)
+    return wrapped
 
 
 def _t_count(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -860,6 +883,7 @@ SELECT doc_id, cell_z, cell_x, cell_y FROM l2
 _STREAM_GATE_SEQ = [0]
 
 
+@_with_stream_state_conf
 def q_stream_first_seen(spark, sf_dir):
     """The REAL Structured Streaming stateful dedup
     (streaming/pipeline.py streaming_dedup_first_seen,
@@ -908,6 +932,7 @@ FROM pages GROUP BY fingerprint
 """
 
 
+@_with_stream_state_conf
 def q_stream_dirty_tiles(spark, sf_dir):
     """Streaming dirty tiles (streaming_dirty_tiles,
     applyInPandasWithState keyed on the tile): a file-source stream of
@@ -4123,6 +4148,7 @@ GROUP BY 1, 2, 3
 """
 
 
+@_with_stream_state_conf
 def q_stream_windowed_counts(spark, sf_dir):
     """The REAL Structured Streaming watermarked window aggregation
     (streaming/pipeline.streaming_windowed_counts) driven as a gate: a
@@ -5528,6 +5554,7 @@ WHERE NOT EXISTS (SELECT 1 FROM pdel p
 """
 
 
+@_with_stream_state_conf
 def q_stream_followup(spark, sf_dir):
     """Watermarked STREAM-STREAM interval join
     (streaming/pipeline.streaming_followup_join) driven as a gate: two
@@ -5677,6 +5704,7 @@ WHERE bit_count(xor(a.fp, b.fp)) <= 3
 """
 
 
+@_with_stream_state_conf
 def q_stream_distinct(spark, sf_dir):
     """Streaming DISTINCT over the BUILT-IN dedup state operator
     (streaming/pipeline.streaming_distinct -> StreamingDeduplicate with
@@ -5709,7 +5737,7 @@ SELECT DISTINCT user_id, event_type FROM events
 
 
 def q_spatial_join_holes(spark, sf_dir):
-    """General-polygon spatial join (spatial_join_points refine='evenodd'):
+    """General-polygon spatial join (spatial_join_points' even-odd path):
     exact INTEGER even-odd ray-cast refinement over concave + holed
     polygons (fixtures.holed_records — a donut whose hole swallows dense
     center #1, a concave L, a triangle), per the north-star's "exact
@@ -5719,8 +5747,7 @@ def q_spatial_join_holes(spark, sf_dir):
     predicate — so the gate simultaneously proves the cell index lossless
     AND the Arrow kernel's parity bit-for-bit."""
     pts = _points_df(spark, sf_dir)
-    out = sj.spatial_join_points(spark, pts, fx.holed_records(),
-                                 refine="evenodd")
+    out = sj.spatial_join_points(spark, pts, fx.holed_records())
     return out.select("doc_id", "ward_code").orderBy("doc_id", "ward_code")
 
 
@@ -5774,6 +5801,7 @@ FROM events e JOIN customer c ON e.user_id = c.c_custkey
 """
 
 
+@_with_stream_state_conf
 def q_stream_enrich(spark, sf_dir):
     """Stream-static enrichment join (streaming.streaming_enrich) — the
     STATELESS streaming engine path (per-batch broadcast hash join, no
@@ -5879,6 +5907,7 @@ SELECT id, min(dist) AS dist FROM walk GROUP BY id
 """
 
 
+@_with_stream_state_conf
 def q_stream_upsert(spark, sf_dir):
     """foreachBatch streaming upsert (streaming.streaming_upsert) — the
     ninth streaming gate, exercising the foreachBatch sink path: keyed
@@ -6731,9 +6760,11 @@ FROM c
 """
 
 
+@_with_stream_state_conf
 def q_stream_tile_counts(spark, sf_dir):
     """The north-star STREAMING form end-to-end (streaming/pipeline.
-    streaming_geocode -> tile assign -> windowed counts): documents
+    streaming_tile_counts: geocode -> tile assign -> windowed counts,
+    the batch operators over a stream): documents
     streamed as pages with geocodable text, regex-geocoded IN-STREAM,
     tiled at z12, counted per (1-minute window, tile) with a 2-minute
     watermark — COMPLETE output mode so availableNow yields every
@@ -7130,6 +7161,7 @@ FROM b JOIN m USING (key)
 """
 
 
+@_with_stream_state_conf
 def q_stream_sessions(spark, sf_dir):
     """Streaming SESSION windows (streaming/pipeline.streaming_sessionize)
     driven as a gate: file stream over the events parquet, per-user
@@ -12081,42 +12113,6 @@ SELECT n_a, n_b, n_both,
            AS n_hat_chapman
 FROM agg
 """
-
-
-def _with_stream_state_conf(fn):
-    """r6 OPTIMIZATION (guide §1.2 step 3, measured): run a streaming
-    gate with its state-store partition count sized for the stream, not
-    inherited from the batch shuffle setting. The partition count is
-    baked into each streaming checkpoint at first batch, and every state
-    partition pays store instantiation + per-batch commit I/O: at 32
-    batch shuffle partitions the stream-stream join (4 stores/partition)
-    measured 6.5 s vs 2.5 s at 8 partitions on the same data — the cost
-    is store/commit overhead, not compute. Production sizes this by
-    stream volume; parameterise via SPARK_GRAFT_STREAM_SHUFFLE (default
-    8 fits the gate micro-batches at ~12.5k rows/partition; raise it for
-    real stream volumes). The emitted rows are partition-independent —
-    the oracle gates prove it. Conf is restored afterwards, so batch
-    queries are untouched."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark, sf_dir):
-        key = "spark.sql.shuffle.partitions"
-        old = spark.conf.get(key)
-        spark.conf.set(
-            key, os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
-        try:
-            return fn(spark, sf_dir)
-        finally:
-            spark.conf.set(key, old)
-    return wrapped
-
-
-for _sfn in ("q_stream_first_seen", "q_stream_dirty_tiles",
-             "q_stream_windowed_counts", "q_stream_followup",
-             "q_stream_distinct", "q_stream_enrich", "q_stream_upsert",
-             "q_stream_tile_counts", "q_stream_sessions"):
-    globals()[_sfn] = _with_stream_state_conf(globals()[_sfn])
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -1,9 +1,14 @@
 """SparkSession factory tuned for the engine.
 
 Local mode here; on a real cluster the same builder is used by spark-submit
-with master/executor settings from the cluster manager. AQE is on so skewed
-shuffle partitions (dense Tokyo cells) are split at runtime
-(spark.sql.adaptive.skewJoin) in addition to the engine's explicit salting.
+with master/executor settings from the cluster manager. AQE runs with Spark's
+defaults (adaptive execution, post-shuffle coalescing toward the cluster
+parallelism with a 64 MiB advisory size, and skew-join splitting for dense
+Tokyo cells, on top of the engine's explicit salting), so the builder sets
+none of them.
+
+Two deployment settings are read from the environment: ``SPARK_GRAFT_CPUS``
+(local cores, default 32) and ``SPARK_DRIVER_MEM`` (default 24g).
 """
 
 from __future__ import annotations
@@ -25,17 +30,6 @@ def get_spark(app: str = "plateau_gis_converter_spark",
         SparkSession.builder.master(master)
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled",
-                os.environ.get("SPARK_GRAFT_AQE", "true"))
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # Coalesce post-shuffle partitions toward the advisory SIZE, not
-        # toward the cluster parallelism (Spark docs recommend false when
-        # small shuffles abound); parameterised for A/B and cluster tuning.
-        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-                os.environ.get("SPARK_GRAFT_AQE_PAR_FIRST", "true"))
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-                os.environ.get("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))

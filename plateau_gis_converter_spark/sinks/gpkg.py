@@ -40,13 +40,6 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def stringify_attribute(value, vtype: str) -> str:
-    """attributes.rs:5-55 stringification rules."""
-    if vtype == "bool":
-        return "1" if value else "0"
-    return str(value)
-
-
 # TypeRef -> (SQLite type, mime) per sink/gpkg/table.rs:52-123.
 # None = attribute skipped (Point/Named/Unknown get no column).
 TYPEREF_TO_SQLITE: dict[str, tuple[str, str | None] | None] = {

@@ -15,30 +15,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import geo
-from ..operators.geocode import LAT_PATTERN, LNG_PATTERN
-
-
-def streaming_geocode(stream: DataFrame, text_col: str = "text") -> DataFrame:
-    lat_s = F.regexp_extract(F.col(text_col), LAT_PATTERN, 1)
-    lng_s = F.regexp_extract(F.col(text_col), LNG_PATTERN, 1)
-    return (stream
-            .withColumn("lat_udeg", F.when(lat_s != "", lat_s.cast("bigint")))
-            .withColumn("lng_udeg", F.when(lng_s != "", lng_s.cast("bigint"))))
+from ..operators.geocode import geocode_expr
+from ..operators.tile_assign import assign_point_tiles
 
 
 def streaming_tile_counts(stream: DataFrame, zoom: int = 12,
                           window: str = "1 minute",
                           watermark: str = "2 minutes",
                           ts_col: str = "warc_ts") -> DataFrame:
-    """Windowed per-tile page counts over an unbounded page stream."""
-    z = F.lit(zoom)
-    geocoded = streaming_geocode(stream).where(
-        F.col("lng_udeg").isNotNull() & F.col("lat_udeg").isNotNull())
-    mx = geo.mercator_mx(geo.udeg_to_deg(F.col("lng_udeg")))
-    my = geo.mercator_my(geo.udeg_to_deg(F.col("lat_udeg")))
-    tiled = (geocoded.withColumn("x", geo.tile_x(z, mx))
-             .withColumn("y", geo.tile_y(z, my))
+    """Windowed per-tile page counts over an unbounded page stream: the
+    batch geocode and tile operators, then a watermarked window count.
+    Pages without coordinates get no tile row (assign_point_tiles)."""
+    tiled = (assign_point_tiles(geocode_expr(stream), zoom, zoom,
+                                with_tile_id=False)
              .withColumn(ts_col, F.col(ts_col).cast("timestamp")))  # NTZ→LTZ
     return (tiled.withWatermark(ts_col, watermark)
             .groupBy(F.window(F.col(ts_col), window), F.col("x"), F.col("y"))
@@ -223,14 +212,7 @@ def streaming_dirty_tiles(updates: DataFrame, zoom: int = 12) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql import types as T
 
-    z = F.lit(zoom)
-    mx = geo.mercator_mx(geo.udeg_to_deg(F.col("lng_udeg")))
-    my = geo.mercator_my(geo.udeg_to_deg(F.col("lat_udeg")))
-    tiled = (updates
-             .where(F.col("lng_udeg").isNotNull()
-                    & F.col("lat_udeg").isNotNull())
-             .withColumn("x", geo.tile_x(z, mx))
-             .withColumn("y", geo.tile_y(z, my)))
+    tiled = assign_point_tiles(updates, zoom, zoom, with_tile_id=False)
 
     out_schema = T.StructType([
         T.StructField("z", T.IntegerType()),

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 from plateau_gis_converter_spark.kernels import hilbert, pip
 from plateau_gis_converter_spark.kernels.mercator import lnglat_to_web_mercator
@@ -39,10 +40,32 @@ def test_geocode_matches_generator(pages_df):
     np.testing.assert_array_equal(got["lat_udeg"].to_numpy(np.int64), lat)
 
 
+@pandas_udf(T.StructType([
+    T.StructField("lng_udeg", T.LongType()),
+    T.StructField("lat_udeg", T.LongType()),
+]))
+def _geocode_udf(text):
+    import pandas as pd
+
+    lat = text.str.extract(geocode.LAT_PATTERN, expand=False).astype("Int64")
+    lng = text.str.extract(geocode.LNG_PATTERN, expand=False).astype("Int64")
+    return pd.DataFrame({"lng_udeg": lng, "lat_udeg": lat})
+
+
+def geocode_pandas(df, text_col="text"):
+    """Arrow-batched pandas extractor: the parity reference for
+    ``geocode.geocode_expr`` (same patterns, a different regex engine)."""
+    pt = _geocode_udf(F.col(text_col))
+    return (df.withColumn("_pt", pt)
+              .withColumn("lng_udeg", F.col("_pt.lng_udeg"))
+              .withColumn("lat_udeg", F.col("_pt.lat_udeg"))
+              .drop("_pt"))
+
+
 def test_geocode_pandas_matches_expr(pages_df):
     a = (geocode.geocode_expr(pages_df).select("url", "lng_udeg", "lat_udeg")
          .toPandas().sort_values("url").reset_index(drop=True))
-    b = (geocode.geocode_pandas(pages_df).select("url", "lng_udeg", "lat_udeg")
+    b = (geocode_pandas(pages_df).select("url", "lng_udeg", "lat_udeg")
          .toPandas().sort_values("url").reset_index(drop=True))
     assert a.equals(b)
 
@@ -111,7 +134,7 @@ def _geocoded_consumers(spark, pts):
         "join_catalyst": spatial_join.spatial_join_points(
             spark, pts, fx.tessellation_records()),
         "join_evenodd": spatial_join.spatial_join_points(
-            spark, pts, fx.holed_records(), refine="evenodd"),
+            spark, pts, fx.holed_records()),
         "tiles": tile_assign.assign_point_tiles(pts, 7, 15),
         "tiles_no_id": tile_assign.assign_point_tiles(
             pts, 7, 15, with_tile_id=False),
@@ -141,7 +164,7 @@ def test_null_coordinates_yield_no_join_or_tile_rows(spark):
     pts = geocode.geocode_expr(spark.createDataFrame(
         list(enumerate(texts)), "doc_id long, text string"))
     one_lng, one_lat = np.array([lng_ok]), np.array([lat_ok])
-    for refine, recs, inside in [
+    for path, recs, inside in [
             ("catalyst", fx.tessellation_records(),
              lambda rings: pip.points_in_convex_polygon_int(
                  one_lng, one_lat, np.asarray(rings[0]))),
@@ -149,11 +172,10 @@ def test_null_coordinates_yield_no_join_or_tile_rows(spark):
              lambda rings: pip.points_in_polygon_int(
                  one_lng, one_lat, [np.asarray(r) for r in rings]))]:
         got = {(r["doc_id"], r["ward_code"]) for r in
-               spatial_join.spatial_join_points(spark, pts, recs,
-                                                refine=refine).collect()}
+               spatial_join.spatial_join_points(spark, pts, recs).collect()}
         want = {(3, rec["ward_code"]) for rec in recs
                 if inside(rec["rings_udeg"])[0]}
-        assert want and got == want, refine
+        assert want and got == want, path
     tiles = tile_assign.assign_point_tiles(pts, 7, 15).collect()
     assert sorted((r["doc_id"], r["z"]) for r in tiles) == [
         (3, z) for z in range(7, 16)]
@@ -372,3 +394,73 @@ def test_zonal_stats_totals_and_disjoint_zones(spark):
     assert got[1][1] == 50
     assert 2 not in got
     assert got[0][0] + got[1][0] <= n_cells
+
+
+def _points_with(spark, extra):
+    """The fixture's first 3000 points plus explicit (lng, lat) probes."""
+    ids = np.arange(3000, dtype=np.int64)
+    lng, lat = fx.point_udeg_np(ids)
+    rows = [(int(i), int(x), int(y)) for i, x, y in zip(ids, lng, lat)]
+    rows += [(10_000 + k, x, y) for k, (x, y) in enumerate(extra)]
+    return spark.createDataFrame(rows, "doc_id long, lng_udeg long, "
+                                       "lat_udeg long"), rows
+
+
+def _evenodd_reference(rows, recs):
+    lng = np.array([r[1] for r in rows], dtype=np.int64)
+    lat = np.array([r[2] for r in rows], dtype=np.int64)
+    want = set()
+    for rec in recs:
+        rings = [np.asarray(r, dtype=np.int64) for r in rec["rings_udeg"]]
+        for i in np.nonzero(pip.points_in_polygon_int(lng, lat, rings))[0]:
+            want.add((rows[i][0], rec["ward_code"]))
+    return want
+
+
+def _python_udfs_in_plan(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "ArrowEvalPython" in plan or "BatchEvalPython" in plan
+
+
+def test_spatial_join_respects_overlay_holes(spark):
+    """The overlays in boundaries_records() have 4-vertex exteriors and a
+    hole each: points in a hole must not match the overlay."""
+    recs = fx.boundaries_records()
+    overlays = [r for r in recs if len(r["rings_udeg"]) > 1]
+    assert len(overlays) == 2
+    holes = [tuple(int(v) for v in np.mean(r["rings_udeg"][1], axis=0))
+             for r in overlays]
+    pts, rows = _points_with(spark, holes)
+    joined = spatial_join.spatial_join_points(spark, pts, recs)
+    got = {(r["doc_id"], r["ward_code"]) for r in joined.collect()}
+    want = _evenodd_reference(rows, recs)
+    assert got == want
+    overlay_codes = {r["ward_code"] for r in overlays}
+    in_hole = {k for k, w in got if k >= 10_000 and w in overlay_codes}
+    assert not in_hole
+    assert any(w in overlay_codes for _, w in got)
+    assert _python_udfs_in_plan(joined)
+
+
+def test_spatial_join_clockwise_quad(spark):
+    """A clockwise quad is the same polygon as its CCW twin; the four
+    left-of-edge predicates would match nothing on it."""
+    quad = fx.tessellation_records()[5]
+    cw = {"ward_code": "CW", "rings_udeg": [quad["rings_udeg"][0][::-1]]}
+    center = tuple(int(v) for v in np.mean(quad["rings_udeg"][0], axis=0))
+    pts, rows = _points_with(spark, [center])
+    got = {(r["doc_id"], r["ward_code"]) for r in
+           spatial_join.spatial_join_points(spark, pts, [cw]).collect()}
+    want = _evenodd_reference(rows, [cw])
+    assert got == want and (10_000, "CW") in want
+
+
+def test_convex_ccw_quads_keep_the_catalyst_path(spark):
+    """Tessellation quads are joined by the in-JVM predicate (no Python in
+    the plan); the hole-bearing fixture sets take the even-odd kernel."""
+    pts, _ = _points_with(spark, [])
+    tess = spatial_join.spatial_join_points(
+        spark, pts, fx.tessellation_records())
+    assert not _python_udfs_in_plan(tess)
+    assert _python_udfs_in_plan(spatial_join.spatial_join_points(
+        spark, pts, fx.holed_records()))

@@ -599,6 +599,39 @@ def test_synthetic_link_edges_shape(spark, docs):
     assert len(set(degs.values())) >= 2
 
 
+def _cc_propagation(und, max_iters):
+    """Synchronous min-label propagation, O(component diameter) rounds: the
+    independent cross-check for ``graph.connected_components``.
+    Returns (labels(id, label), rounds, converged)."""
+    labels = (und.select(F.col("a").alias("id")).distinct()
+              .withColumn("label", F.col("id"))
+              .localCheckpoint())
+    # labels are non-increasing per node, so sum(label) strictly decreases
+    # until the fixpoint
+    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
+    for i in range(max_iters):
+        neigh = (und.join(labels, und["b"] == labels["id"])
+                 .groupBy("a").agg(F.min("label").alias("nmin")))
+        labels = (labels.join(neigh, labels["id"] == neigh["a"], "left")
+                  .select("id",
+                          F.least(F.col("label"),
+                                  F.coalesce(F.col("nmin"), F.col("label")))
+                          .alias("label"))
+                  .localCheckpoint())
+        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
+        if cur_sum == prev_sum:
+            return labels, i + 1, True
+        prev_sum = cur_sum
+    return labels, max_iters, False
+
+
+def _undirected(pairs):
+    return (pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+            .unionAll(pairs.select(F.col("doc_b").alias("a"),
+                                   F.col("doc_a").alias("b")))
+            .distinct().localCheckpoint())
+
+
 def test_connected_components_multihop(spark):
     """Path graph exercises multi-round label propagation (diameter 3),
     plus a second component and reversed-order pairs."""
@@ -609,11 +642,9 @@ def test_connected_components_multihop(spark):
     out = {r["id"]: r["component_id"] for r in
            gr.connected_components(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
-    # both algorithms agree
-    out2 = {r["id"]: r["component_id"] for r in
-            gr.connected_components(pairs,
-                                    algorithm="propagation").collect()}
-    assert out2 == out
+    # agrees with plain min-label propagation
+    labels, _, ok = _cc_propagation(_undirected(pairs), 10)
+    assert ok and {r["id"]: r["label"] for r in labels.collect()} == out
 
 
 def test_connected_components_deep_chain(spark):
@@ -621,37 +652,23 @@ def test_connected_components_deep_chain(spark):
     long path graph — logarithmic rounds vs O(diameter) for plain
     propagation, identical labels; exhaustion raises instead of returning
     silently-unconverged labels (ADVICE r3)."""
-    import pytest
-
     from plateau_gis_converter_spark.operators import graph as gr
-    from pyspark.sql import functions as F
 
     n = 120  # path 0-1-2-...-119: diameter 119
     pairs = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                   "doc_a: long, doc_b: long")
-    und = (pairs.select(F.col("doc_a").alias("a"),
-                        F.col("doc_b").alias("b"))
-           .unionAll(pairs.select(F.col("doc_b").alias("a"),
-                                  F.col("doc_a").alias("b")))
-           .distinct().localCheckpoint())
+    und = _undirected(pairs)
     alt_labels, alt_rounds, alt_ok = gr._cc_alternating(und, 40)
     assert alt_ok and alt_rounds < 15
     got = {r["id"]: r["label"] for r in alt_labels.collect()}
     assert got == {i: 0 for i in range(n)}
-    # VERDICT r4 #9: trimming large-star's intermediate distinct must not
-    # change labels or round count (small-star's distinct restores the
-    # invariant each round)
-    kept_labels, kept_rounds, kept_ok = gr._cc_alternating(
-        und, 40, intermediate_distinct=True)
-    assert kept_ok and kept_rounds == alt_rounds
-    assert {r["id"]: r["label"] for r in kept_labels.collect()} == got
     # plain propagation needs ~diameter rounds on the same graph
-    _, prop_rounds, prop_ok = gr._cc_propagation(und, n + 5)
+    prop_labels, prop_rounds, prop_ok = _cc_propagation(und, n + 5)
     assert prop_ok and prop_rounds > 3 * alt_rounds
+    assert {r["id"]: r["label"] for r in prop_labels.collect()} == got
     # exhaustion must raise, not return wrong labels
     with pytest.raises(RuntimeError, match="did not converge"):
-        gr.connected_components(pairs, max_iters=2,
-                                algorithm="propagation")
+        gr.connected_components(pairs, max_iters=2)
 
 
 def test_stratified_sample_deterministic(spark):

@@ -1,7 +1,6 @@
 """Round-5 wave 19: general-polygon (concave + holes) even-odd spatial
 join, fragment-replicate skew join, stream-static enrichment."""
 import numpy as np
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -67,7 +66,7 @@ def test_spatial_join_evenodd_vs_bruteforce(spark):
     pts = base.select("doc_id", lng, lat)
     got = {(r["doc_id"], r["ward_code"])
            for r in sj.spatial_join_points(
-               spark, pts, fx.holed_records(), refine="evenodd")
+               spark, pts, fx.holed_records())
            .select("doc_id", "ward_code").collect()}
     raw = pts.collect()
     want = set()
@@ -83,13 +82,6 @@ def test_spatial_join_evenodd_vs_bruteforce(spark):
                     if 139_690_000 < r["lng_udeg"] < 139_710_000
                     and 35_680_000 < r["lat_udeg"] < 35_700_000)
     assert n_in_hole > 0
-
-
-def test_spatial_join_rejects_unknown_refine(spark):
-    with pytest.raises(ValueError):
-        sj.spatial_join_points(spark, spark.range(1).selectExpr(
-            "id as doc_id", "id as lng_udeg", "id as lat_udeg"),
-            fx.holed_records(), refine="evenod")
 
 
 def test_salted_replicated_join_parity_and_plan(spark):

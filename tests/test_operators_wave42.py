@@ -1,4 +1,5 @@
 """Round-5 wave 42: water-filling mix solver, calibration bins, nDCG."""
+import pytest
 from pyspark.sql import Row
 
 from plateau_gis_converter_spark.operators import retrieval as rt
@@ -70,6 +71,25 @@ def test_waterfill_lazy_budget_rejects_multi_column(spark):
     bad = spark.range(1).select(F.lit(1).alias("x"), F.lit(2).alias("y"))
     with pytest.raises(ValueError, match="exactly one"):
         sp.mix_waterfill(src, bad)
+
+
+@pytest.mark.parametrize("rows, value", [
+    (2, 90), (0, 90), (1, None), (1, -1)],
+    ids=["multi_row", "empty", "null", "negative"])
+def test_waterfill_lazy_budget_rejects_bad_relations(spark, rows, value):
+    """A budget relation with several rows, no row, a NULL or a negative
+    value fails the query instead of corrupting the quotas."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+    from pyspark.sql import functions as F
+
+    src = _src(spark, [("a", 10, 1), ("b", 100, 1), ("c", 100, 1)])
+    bdf = spark.range(rows).select(F.lit(value).cast("bigint").alias("b"))
+    # AQE wraps the error in a plain SparkException (Py4JJavaError) when
+    # several stages fail on it at once
+    with pytest.raises((PySparkException, Py4JJavaError),
+                       match="exactly one non-NULL row"):
+        sp.mix_waterfill(src, bdf).collect()
 
 
 # ---------------------------------------------------------- calibration bins

@@ -7,22 +7,10 @@ from pyspark.sql import functions as F
 from plateau_gis_converter_spark.operators import transforms as tr
 from plateau_gis_converter_spark.plans import pipeline as pl
 
-# r6 OPTIMIZATION side effect, documented: ``entry_queries._t`` spreads the
-# single-split fixture files across cores by hash-repartitioning on the
-# table's LEADING KEY column (the keyless round-robin it replaced paid a
-# local sort of every scan — SPARK-23207's retry-determinism rule). The
-# spread key therefore appears in the scan's ReadSchema in these local
-# fixtures; production tables have real splits and never take that path.
-# The pruning audits assert: every required column is read, and nothing
-# beyond the required set plus the documented spread keys.
-SPREAD_KEYS = {"r_regionkey", "n_nationkey", "c_custkey", "s_suppkey",
-               "p_partkey", "o_orderkey", "l_orderkey", "event_id",
-               "doc_id", "vec_id"}
-
 
 def assert_pruned(cols, want, name=""):
     assert want <= cols, f"{name} scan missing {sorted(want - cols)}"
-    extra = cols - want - SPREAD_KEYS
+    extra = cols - want
     assert not extra, f"{name} scan reads unexpected {sorted(extra)}"
 
 

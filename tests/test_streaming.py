@@ -27,6 +27,13 @@ def test_streaming_tile_counts(spark, pages_stream_dir, tmp_path):
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
     q.awaitTermination(120)
+    # no optimized-plan Filter re-runs the geocode (a pushed null filter
+    # would inline its regex once per filter term)
+    plan = (q._jsq.streamingQuery().lastExecution().optimizedPlan()
+            .toString())
+    filters = [ln for ln in plan.splitlines()
+               if ln.lstrip(" :+-~").startswith("Filter")]
+    assert not [f for f in filters if "regexp_extract" in f], filters
     out = spark.sql("SELECT * FROM tile_counts").toPandas()
     assert len(out) > 0
     assert out["n_pages"].sum() == 500  # every page in exactly one z12 tile
@@ -303,3 +310,4 @@ def test_streaming_sessionize_append_emission_boundaries(spark, tmp_path):
     assert r["user_id"] == 1 and r["n_events"] == 2
     assert r["sum_value_cents"] == 150 + 225
     assert (r["session_end"] - r["session_start"]).total_seconds() == 3600
+
