@@ -56,20 +56,24 @@ def lpm_join(df: DataFrame, prefixes: DataFrame, ip_col: str = "ip",
                         if c not in ("net", "plen")]
     # plan-time validation on the SMALL dim (bounded driver work, the
     # IVF-centroid pattern): reject misaligned prefixes and collect the
-    # distinct lengths the cascade needs — ONE grouped aggregate serves
-    # both (r6: was a limit(1) probe plus a separate distinct collect).
+    # distinct lengths the cascade needs — ONE global aggregate serves
+    # both, and it returns one row of at most 33 lengths whatever the
+    # input, so a corrupt relation cannot blow up the collect.
     # (the host-bits mask needs a per-row shift by column — SQL form)
-    chk = (prefixes.groupBy("plen").agg(
+    chk = prefixes.agg(
         F.max(F.expr(
             "CASE WHEN plen < 0 OR plen > 32 OR net < 0 "
             "OR net > 4294967295 OR "
             "(net & (CASE WHEN plen = 32 THEN CAST(0 AS BIGINT) "
             " ELSE shiftleft(CAST(1 AS BIGINT), 32 - plen) - 1 END)) != 0 "
-            "THEN 1 ELSE 0 END")).alias("bad")).collect())
-    if any(r["bad"] for r in chk):
+            "THEN 1 ELSE 0 END")).alias("bad"),
+        F.array_sort(F.collect_set(F.when(
+            F.col("plen").between(0, 32), F.col("plen")))).alias("plens"),
+    ).collect()[0]
+    if chk["bad"]:
         raise ValueError("prefixes contain out-of-range or misaligned "
                          "entries (host bits set below the mask)")
-    plens = sorted((r["plen"] for r in chk), reverse=True)
+    plens = chk["plens"][::-1]
     # Every per-length probe joins the same pre-shifted relation with
     # `_plen == <p>` in its equi-key. The optimizer pushes that equality
     # into each build side, so each length broadcasts its own filtered

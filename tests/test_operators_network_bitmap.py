@@ -59,6 +59,31 @@ def test_lpm_rejects_out_of_range_plen(spark):
         nw.lpm_join(ips, bad, "ip", ["label"])
 
 
+def test_lpm_validation_collects_one_row(spark, prefixes, monkeypatch):
+    """10^5 distinct out-of-range lengths still raise, and the driver
+    receives one row for them, not one row per length."""
+    collected = []
+    collect = type(prefixes).collect
+
+    def spy(df):
+        rows = collect(df)
+        collected.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(type(prefixes), "collect", spy)
+    bad = spark.range(100000).select(
+        F.lit(0).cast("bigint").alias("net"),
+        (F.col("id") + 33).cast("int").alias("plen"),
+        F.lit("x").alias("label"))
+    ips = spark.createDataFrame([(1, 0)], "k bigint, ip bigint")
+    with pytest.raises(ValueError, match="out-of-range"):
+        nw.lpm_join(ips, bad, "ip", ["label"])
+    assert collected == [1]
+    collected.clear()
+    nw.lpm_join(ips, prefixes, "ip", ["label"])
+    assert collected == [1]
+
+
 def test_lpm_plan_is_broadcast_only(spark, prefixes):
     """The cascade must compile to broadcast hash joins — never a
     shuffled join of the fact."""

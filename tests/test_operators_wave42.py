@@ -92,6 +92,24 @@ def test_waterfill_lazy_budget_rejects_bad_relations(spark, rows, value):
         sp.mix_waterfill(src, bdf).collect()
 
 
+def test_mix_plan_evaluates_the_budget_guard_once(spark):
+    """q_mix_plan's budget (a corpus aggregate) feeds both the water level
+    and the crossJoin. The initial plan has the guard twice, but after a
+    run the final plan evaluates it in one broadcast stage; the other
+    branch reuses the window's exchange."""
+    from conftest import SF_DIR
+
+    from plateau_gis_converter_spark.plans import entry_queries as eq
+
+    df = eq.QUERIES["mix_plan"](spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==", 1)[1] \
+        .split("== Initial Plan ==", 1)[0]
+    assert final.count("raise_error") == 1
+    assert "ReusedExchange" in final
+
+
 # ---------------------------------------------------------- calibration bins
 
 def test_calibration_bins_and_ece(spark):

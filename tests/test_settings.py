@@ -1,7 +1,10 @@
 """The package's settings surface: two deployment variables from the
-environment and Spark's own AQE defaults, nothing else."""
+environment, Spark's own AQE defaults and two fixed codegen settings,
+nothing else."""
 import pathlib
 import re
+
+from pyspark.sql import functions as F
 
 import plateau_gis_converter_spark
 
@@ -43,3 +46,48 @@ def test_get_spark_keeps_the_aqe_settings(spark):
     to_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils \
         .byteStringAsBytes
     assert to_bytes(advisory) == to_bytes("64m") == 64 << 20
+
+
+def test_get_spark_sets_the_codegen_settings(spark):
+    conf = spark.conf
+    assert int(conf.get("spark.sql.codegen.cache.maxEntries")) == 3000
+    assert conf.get("spark.sql.codegen.useIdInClassName").lower() == "false"
+
+
+def _compiles(spark) -> int:
+    """Janino compilations in this JVM so far: one per codegen cache miss."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+def test_codegen_cache_holds_a_pass_of_distinct_queries(spark):
+    """150 one-stage queries, each with its own inlined bigint literal, need
+    150 distinct whole-stage classes; Spark's default cache holds 100, so a
+    second pass would compile all of them again."""
+    queries = [spark.range(8).select(F.col("id") + F.lit(i))
+               for i in range(10**12, 10**12 + 150)]
+    for q in queries:
+        q.collect()
+    before = _compiles(spark)
+    for q in queries:
+        q.collect()
+    assert _compiles(spark) - before == 0
+
+
+def test_codegen_class_is_shared_across_stage_ids(spark):
+    """A pipeline compiled as codegen stage 1 is reused as stage 2."""
+    def pipeline(mult):
+        return (spark.range(0, 64, 1, 2)
+                .select((F.col("id") * mult + 3).alias("v"))
+                .where("v % 5 = 1"))
+
+    first, second = pipeline(7), pipeline(11)
+    first.collect()
+    second.collect()
+    both = first.unionByName(second)
+    plan = both._jdf.queryExecution().executedPlan().toString()
+    assert "*(2)" in plan          # the second pipeline is stage 2 here
+    before = _compiles(spark)
+    assert len(both.collect()) == len(first.collect()) \
+        + len(second.collect())
+    assert _compiles(spark) - before == 0
