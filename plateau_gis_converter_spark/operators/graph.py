@@ -29,14 +29,15 @@ to the edge list on src (shuffle keyed by src, or map-side if edges are
 pre-bucketed by src) plus one partial-combine hash aggregation keyed by
 dst. State per node is a single long. The iteration count is a small
 constant (quality filtering uses 2-5 iterations, not convergence), so the
-lineage stays shallow; for long chains localCheckpoint per K iterations
-caps plan growth.
+lineage stays shallow.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .materialize import materialize
 
 BASE_PPM = 1_000_000
 
@@ -48,7 +49,6 @@ def out_degrees(edges: DataFrame) -> DataFrame:
 
 def pagerank_int(nodes: DataFrame, edges: DataFrame, iters: int = 3,
                  damping_pct: int = 85,
-                 checkpoint_every: int = 8,
                  dangling: str = "drop",
                  n_nodes: int | None = None,
                  teleport: DataFrame | None = None) -> DataFrame:
@@ -96,7 +96,7 @@ def pagerank_int(nodes: DataFrame, edges: DataFrame, iters: int = 3,
     else:
         init = F.lit(BASE_PPM)
     scores = nodes.select("id", init.cast("long").alias("score_e6"))
-    for i in range(iters):
+    for _ in range(iters):
         contrib = (scored_edges
                    .join(scores, scored_edges["src"] == scores["id"])
                    .select(F.col("dst"),
@@ -117,14 +117,11 @@ def pagerank_int(nodes: DataFrame, edges: DataFrame, iters: int = 3,
             "id",
             (base + F.expr(f"({damping_pct} * ({inc_sql})) div 100"))
             .cast("long").alias("score_e6"))
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            scores = scores.localCheckpoint()
     return scores
 
 
 def hits_scores(nodes: DataFrame, edges: DataFrame, iters: int = 3,
-                scale: int = BASE_PPM,
-                checkpoint_every: int = 4) -> DataFrame:
+                scale: int = BASE_PPM) -> DataFrame:
     """Integer-exact HITS (Kleinberg 1999): mutually-recursive hub and
     authority scores over a directed link graph — the classic complement
     to PageRank for web corpora (a page LINKING many authorities is a hub;
@@ -161,7 +158,7 @@ def hits_scores(nodes: DataFrame, edges: DataFrame, iters: int = 3,
     """
     hub = nodes.select("id", F.lit(scale).cast("long").alias("hub"))
     auth = nodes.select("id", F.lit(scale).cast("long").alias("auth"))
-    for i in range(iters):
+    for _ in range(iters):
         araw = (edges.join(hub, edges["src"] == hub["id"])
                 .groupBy("dst").agg(F.sum("hub").alias("s")))
         auth = (nodes.join(araw, nodes["id"] == araw["dst"], "left")
@@ -182,9 +179,6 @@ def hits_scores(nodes: DataFrame, edges: DataFrame, iters: int = 3,
         hub = (hub.crossJoin(F.broadcast(hmx))
                .select("id", F.expr(f"raw * {scale} div __mx")
                        .cast("long").alias("hub")))
-        if (i + 1) % checkpoint_every == 0 and i + 1 < iters:
-            auth = auth.localCheckpoint()
-            hub = hub.localCheckpoint()
     return (auth.join(hub, "id")
             .select("id", F.col("auth").alias("auth_e6"),
                     F.col("hub").alias("hub_e6")))
@@ -205,23 +199,20 @@ def bfs_distances(seeds: DataFrame, edges: DataFrame,
     Shape: level-synchronous frontier expansion. Each level is ONE
     equi-join of the current frontier against the edge list keyed by src
     + a distinct, then ONE anti-join against the visited set — textbook
-    BFS with O(level) driver scalars (a single count per level for early
-    exit; the frontier itself never reaches the driver). The visited set
-    is checkpointed per level so lineage stays flat. Crawl-depth use is
-    max_depth <= ~10, so the round count is a small constant; each round
-    shuffles only the FRONTIER (new nodes), so total shuffled volume over
-    the whole run is O(V + E touched), not O(depth * V).
+    BFS. The visited set is checkpointed per level so lineage stays flat,
+    and that checkpoint job also counts the level's new nodes for the
+    early exit (the frontier itself never reaches the driver). Crawl-depth
+    use is max_depth <= ~10, so the round count is a small constant; each
+    round shuffles only the FRONTIER (new nodes), so total shuffled volume
+    over the whole run is O(V + E touched), not O(depth * V).
     """
     visited = (seeds.select("id").distinct()
                .withColumn("dist", F.lit(0).cast("bigint"))
                .localCheckpoint(eager=True))
-    # r6 OPTIMIZATION (measured: 52 Spark jobs for a 4-level BFS): pin the
-    # edge relation once — the caller passes it lazily (union+distinct
-    # lineage) and every level's frontier join was re-deriving it; and cut
-    # three jobs per level to two: the new frontier is carried INSIDE the
-    # checkpointed visited relation (dist == level) instead of its own
-    # checkpoint, and the emptiness probe reads that cached relation.
-    # The visited relation produced is identical row-for-row.
+    # Pin the edge relation once: the caller passes it lazily (union +
+    # distinct lineage) and every level's frontier join would re-derive it.
+    # The new frontier is carried INSIDE the checkpointed visited relation
+    # (dist == level) instead of its own checkpoint.
     edges = edges.select("src", "dst").localCheckpoint(eager=True)
     frontier = visited.select("id")
     for d in range(1, max_depth + 1):
@@ -229,10 +220,12 @@ def bfs_distances(seeds: DataFrame, edges: DataFrame,
                .select(F.col("dst").alias("id")).distinct())
         new = (nxt.join(visited.select("id"), "id", "left_anti")
                .withColumn("dist", F.lit(d).cast("bigint")))
-        visited = visited.unionByName(new).localCheckpoint(eager=False)
-        frontier = visited.where(F.col("dist") == d).select("id")
-        if frontier.count() == 0:
+        visited, st = materialize(
+            visited.unionByName(new),
+            n_new=F.count(F.when(F.col("dist") == d, 1)))
+        if st["n_new"] == 0:
             break
+        frontier = visited.where(F.col("dist") == d).select("id")
     return visited
 
 
@@ -311,13 +304,15 @@ def _cc_alternating(und: DataFrame, max_iters: int):
          .select(F.col("a").alias("u"), F.col("b").alias("v")))
     prev = None
     for i in range(max_iters):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        # cheap stall TRIGGER: one aggregate over the edge set (labels
-        # only decrease, so these stats stall at the fixpoint). The
-        # trigger may rarely fire early — harmless, because the sound
-        # verification below rejects any non-fixpoint labeling.
-        cur = tuple(e.agg(F.count(F.lit(1)), F.sum("u"), F.sum("v"))
-                    .collect()[0])
+        # cheap stall TRIGGER: (count, sum, sum) over the edge set, observed
+        # by its checkpoint job (labels only decrease, so these stats stall
+        # at the fixpoint). The trigger may rarely fire early — harmless,
+        # because the sound verification below rejects any non-fixpoint
+        # labeling.
+        e, st = materialize(_small_star(_large_star(e)),
+                            n=F.count(F.lit(1)), su=F.sum("u"),
+                            sv=F.sum("v"))
+        cur = tuple(st.values())
         if cur == prev:
             est = e.groupBy("u").agg(F.min("v").alias("p"))
             labels = (nodes.join(est, nodes["id"] == est["u"], "left")
@@ -610,9 +605,10 @@ def k_core(edges: DataFrame, k: int, max_iters: int = 30) -> DataFrame:
     is engine-reproducible.
 
     Each round is one partial-agg degree count + two semi-joins against
-    the surviving-node relation; the driver sees only one COUNT per
-    round (the alive-set fixpoint check), and ``localCheckpoint`` caps
-    lineage the same way the alternating-CC rounds do. Rounds needed is
+    the surviving-node relation, which is pinned once per round; the
+    driver sees only its row count (the alive-set fixpoint check),
+    observed by the pinning job, and ``localCheckpoint`` caps lineage
+    the same way the alternating-CC rounds do. Rounds needed is
     the peeling depth (typically << diameter); raises on exhaustion
     rather than returning a silently-unconverged core (the CC
     discipline, ADVICE r3 #2).
@@ -630,17 +626,19 @@ def k_core(edges: DataFrame, k: int, max_iters: int = 30) -> DataFrame:
            .localCheckpoint(eager=False))
     prev_alive = -1
     for _ in range(int(max_iters)):
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        alive = deg.where(F.col("deg") >= int(k)).select("u")
-        n_alive = alive.count()
+        core, st = materialize(
+            sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+            .where(F.col("deg") >= int(k)),
+            n=F.count(F.lit(1)))
+        n_alive = st["n"]
         if n_alive == prev_alive:
-            return (deg.where(F.col("deg") >= int(k))
-                    .select(F.col("u").cast("bigint").alias("id"),
-                            F.col("deg").cast("bigint").alias("deg")))
+            return core.select(F.col("u").cast("bigint").alias("id"),
+                               F.col("deg").cast("bigint").alias("deg"))
         if n_alive == 0:
             return sym.sparkSession.createDataFrame(
                 [], "id bigint, deg bigint")
         prev_alive = n_alive
+        alive = core.select("u")
         sym = (sym.join(alive, "u", "left_semi")
                .join(alive.withColumnRenamed("u", "v"), "v", "left_semi")
                .select("u", "v")
@@ -703,14 +701,12 @@ def sssp_from_seeds(seeds: DataFrame, edges: DataFrame,
     Shape per round: ONE equi-join of the current distance relation to
     the edge list keyed by src + ONE min-aggregation keyed by node —
     state is one long per node, O(1) driver scalars per round (the
-    improved-row count for the fixpoint check; distances never reach
-    the driver). Converged when no node improves; raises if the budget
-    exhausts first (negative-cycle sentinel / budget misconfiguration),
-    the same honesty rule as connected_components.
+    fixpoint check's row count and distance sum, observed by the round's
+    checkpoint job; distances never reach the driver). Converged when no
+    node improves; raises if the budget exhausts first (negative-cycle
+    sentinel / budget misconfiguration), the same honesty rule as
+    connected_components.
     """
-    dist = (seeds.select("id").distinct()
-            .withColumn("dist", F.lit(0).cast("bigint"))
-            .localCheckpoint(eager=True))
     # Pin the edge relation ONCE: the loop re-joins it every round, and an
     # unpinned lineage gets re-analyzed/re-planned per round — measured
     # superlinear round-time growth (0.5 s -> 30 s by round 6 at sf0.01)
@@ -718,58 +714,74 @@ def sssp_from_seeds(seeds: DataFrame, edges: DataFrame,
     # persist(DISK_ONLY) or a staged parquet of the edge list.
     edges = (edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
              .localCheckpoint(eager=True))
-    # r6 OPTIMIZATION: the per-round improved-row probe was a join of the
-    # new distances against the old plus a count; rows only appear and
-    # distances only decrease, so (row count, dist sum) stalling between
-    # consecutive rounds is EXACTLY improved == 0 — one aggregate on the
-    # freshly checkpointed relation, no join. Round count and results are
-    # bit-identical (the probe is seeded with the initial relation's
-    # stats so an immediate fixpoint is caught in round 1, as before).
-    prev = (dist.count(), 0)
-    for _ in range(max_rounds):
-        relaxed = (dist.join(edges, dist["id"] == edges["src"])
-                   .select(F.col("dst").alias("id"),
-                           (F.col("dist") + F.col("w").cast("bigint"))
-                           .alias("dist")))
-        dist = (dist.unionByName(relaxed)
-                .groupBy("id").agg(F.min("dist").alias("dist"))
-                .localCheckpoint(eager=True))
-        stats = tuple(dist.agg(F.count(F.lit(1)),
-                               F.sum("dist")).collect()[0])
-        if stats == prev:
-            return dist
-        prev = stats
+    dist = _relax_to_fixpoint(
+        seeds.select("id").distinct()
+        .withColumn("dist", F.lit(0).cast("bigint")),
+        edges, "dist", F.col("dist") + F.col("w"), F.min, max_rounds)
+    if dist is not None:
+        return dist
     raise RuntimeError(
         f"sssp_from_seeds did not converge in {max_rounds} rounds — "
         f"raise max_rounds (graph deeper than the budget) or check for "
         f"negative weights")
 
-def _bounded_squared(e: DataFrame, max_doublings: int = 4,
-                     growth_cap: int = 8) -> DataFrame:
-    """r6 OPTIMIZATION — iterated BOUNDED SQUARING of a directed edge
-    relation (the classic recursive-doubling/transitive-closure trick,
-    size-guarded): returns a relation with the SAME transitive closure
-    as ``e`` that additionally contains every path of length up to 2^k
+
+def _relax_to_fixpoint(init: DataFrame, edges: DataFrame, col: str,
+                       step: Column, best, max_rounds: int):
+    """Monotone propagation over the pinned ``edges``: per round ONE
+    equi-join of the (id, ``col``) relation to the edges keyed by src,
+    moving ``step`` to dst, + ONE ``best`` (min/max) aggregation per node.
+    Rows only appear and values only improve, so (row count, ``col`` sum),
+    observed by the round's checkpoint job and seeded with the initial
+    relation's, stalls EXACTLY when no node improved. Returns the
+    fixpoint, or None if ``max_rounds`` exhausts first."""
+    # coalesced so that an all-zero start, empty or not, reads (rows, 0)
+    cur, st = materialize(init, n=F.count(F.lit(1)),
+                          s=F.coalesce(F.sum(col), F.lit(0)))
+    prev = tuple(st.values())
+    for _ in range(max_rounds):
+        relaxed = (cur.join(edges, cur["id"] == edges["src"])
+                   .select(F.col("dst").alias("id"), step.alias(col)))
+        cur, st = materialize(cur.unionByName(relaxed).groupBy("id")
+                              .agg(best(col).alias(col)),
+                              n=F.count(F.lit(1)), s=F.sum(col))
+        if tuple(st.values()) == prev:
+            return cur
+        prev = tuple(st.values())
+    return None
+
+
+# _bounded_squared's budget: at most 2^4 hops per edge, and stop once the
+# squared relation outgrows 8x the input
+_MAX_DOUBLINGS = 4
+_GROWTH_CAP = 8
+
+
+def _bounded_squared(e: DataFrame, base: int) -> DataFrame:
+    """Iterated BOUNDED SQUARING of a directed edge relation ``e`` of
+    ``base`` rows (the classic recursive-doubling/transitive-closure
+    trick, size-guarded): returns a relation with the SAME transitive
+    closure as ``e`` that additionally contains every path of length up to 2^k
     as a direct edge, so one synchronous min-label propagation round
     covers 2^k hops instead of one — O(log depth) materialized rounds
     instead of O(depth). Doubling stops as soon as the squared relation
-    exceeds ``growth_cap`` x the input size (hub-dense graphs approach
+    exceeds ``_GROWTH_CAP`` x the input size (hub-dense graphs approach
     the quadratic closure and keep the plain edges — the same bounded-
     growth discipline as the shingle max_df caps); sparse chain/cycle
     graphs (redirect webs, SCC condensations) stay near-linear and get
     the full log-depth win. Self-loops produced by squaring are
     harmless for min-label propagation (a no-op update)."""
-    base = e.count()
     if base == 0:
         return e
     r, cur = e, base
-    for _ in range(max_doublings):
+    for _ in range(_MAX_DOUBLINGS):
         a = r.select("src", F.col("dst").alias("mid"))
         b = r.select(F.col("src").alias("mid"), "dst")
-        r2 = (r.unionByName(a.join(b, "mid").select("src", "dst"))
-              .distinct().localCheckpoint(eager=False))
-        c2 = r2.count()
-        if c2 > growth_cap * base:
+        r2, st = materialize(
+            r.unionByName(a.join(b, "mid").select("src", "dst")).distinct(),
+            n=F.count(F.lit(1)))
+        c2 = st["n"]
+        if c2 > _GROWTH_CAP * base:
             return r
         if c2 == cur:
             # r ⊆ r2 and |r| == |r2| => squaring added nothing => r is
@@ -786,66 +798,47 @@ def _directed_min_reach(nodes: DataFrame, edges: DataFrame,
     """Min-id reachability closure label in ONE direction: for every node
     v, the smallest node id that can reach v along edge direction
     (``forward=True``: label flows src -> dst; ``False``: dst -> src).
-    Synchronous monotone propagation — labels start at own id and only
-    decrease, so the label SUM is strictly decreasing until the fixpoint
-    and one cheap aggregate per round is a SOUND convergence test (no
-    change in the monotone system == fixpoint == the true closure min).
-    Returns (labels(id, label), converged). O(condensation diameter)
-    rounds, each one equi-join + one partial-agg min; O(1) driver
-    scalars per round."""
-    src, dst = ("src", "dst") if forward else ("dst", "src")
-    labels = (nodes.select("id").withColumn("label", F.col("id"))
-              .localCheckpoint(eager=True))
-    prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    # r6 OPTIMIZATION: the round is ONE union + ONE min-aggregation
-    # (labels' = min over self ∪ propagated neighbor labels) instead of
-    # join + groupBy + left-join — one fewer exchange per round, same
-    # relation (min(label, coalesce(nmin, label)) == min over the union).
-    for _ in range(max_rounds):
-        prop = (edges.join(labels, edges[src] == labels["id"])
-                .select(F.col(dst).alias("id"), "label"))
-        labels = (labels.unionByName(prop)
-                  .groupBy("id").agg(F.min("label").alias("label"))
-                  .localCheckpoint(eager=False))
-        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if cur_sum == prev_sum:
-            return labels, True
-        prev_sum = cur_sum
-    return labels, False
+    Labels start at own id and only decrease, so ``_relax_to_fixpoint``'s
+    stall test is SOUND (no change in the monotone system == fixpoint ==
+    the true closure min). Returns labels(id, label), or None when
+    ``max_rounds`` exhausts first; O(condensation diameter) rounds."""
+    if not forward:
+        edges = edges.select(F.col("dst").alias("src"),
+                             F.col("src").alias("dst"))
+    return _relax_to_fixpoint(
+        nodes.select("id").withColumn("label", F.col("id")), edges,
+        "label", F.col("label"), F.min, max_rounds)
 
 
-def _scc_trim(remaining: DataFrame, e: DataFrame, max_rounds: int):
+def _scc_trim(remaining: DataFrame, n_rem: int, e: DataFrame, n_e: int,
+              max_rounds: int):
     """FW-BW-Trim's Trim phase: a node with no in-edge or no out-edge in
     the remaining subgraph cannot lie on a directed cycle, so it is a
     singleton SCC — peel such nodes iteratively (removing one layer
     exposes the next, e.g. an acyclic chain trims end-in). WITHOUT this
     phase every acyclic chain node would cost a full FW+BW peel of its
-    own. Returns (trimmed_labels, remaining, edges).
+    own. ``n_rem``/``n_e`` count the pinned ``remaining``/``e``. Returns
+    (trimmed_labels, remaining, n_rem, edges, n_e).
 
-    r6 OPTIMIZATION (measured: trim was ~5 jobs/round x 11 rounds on the
-    sf0.1 gate): per round only the keep-set is materialized and counted
-    (2 jobs). The restricted edge set is derived LAZILY from the pinned
-    input edges and the current checkpointed keep-set (restriction to a
-    monotonically shrinking node set is idempotent, so restricting e0
-    directly to remaining_k equals the old iterative restriction);
-    trimmed labels accumulate as a lazy union of anti-joins over
-    checkpointed inputs, executed once by the consumer. The distinct()
-    on the degree probes is dropped — left-semi joins ignore right-side
-    multiplicity. Identical output relations.
+    Per round only the keep-set is materialized (and counted by that
+    job). The restricted edge set is derived LAZILY from
+    the pinned input edges and the current checkpointed keep-set
+    (restriction to a monotonically shrinking node set is idempotent, so
+    restricting e0 directly to remaining_k equals the iterative
+    restriction); trimmed labels accumulate as a lazy union of anti-joins
+    over checkpointed inputs, executed once by the consumer. The degree
+    probes need no distinct: left-semi joins ignore right-side
+    multiplicity.
 
     One layer per materialized round: peeling 2 or 3 layers lazily per
     round measured 1.1x / 1.4x slower on the sf0.1 gate, because under
     AQE the job count tracks exchanges, not driver actions
     (OPTIMIZATION_r06.md)."""
     trimmed = None
-    n_rem = remaining.count()
     for _ in range(max(1, max_rounds)):
         if n_rem == 0:
             break
-        rs = remaining.select(F.col("id").alias("src"))
-        rd = remaining.select(F.col("id").alias("dst"))
-        e_k = (e.join(rs, "src", "left_semi")
-               .join(rd, "dst", "left_semi"))
+        e_k = _restricted(e, remaining)
         # both-degree probe as ONE flag aggregation over the restricted
         # edge endpoints (endpoints are ⊆ remaining by construction, so
         # no join back to remaining is needed) — one shuffle instead of
@@ -857,9 +850,10 @@ def _scc_trim(remaining: DataFrame, e: DataFrame, max_rounds: int):
                                       F.lit(1).alias("i")))
                  .groupBy("id").agg(F.max("o").alias("o"),
                                     F.max("i").alias("i")))
-        keep = (flags.where((F.col("o") == 1) & (F.col("i") == 1))
-                .select("id").localCheckpoint(eager=False))
-        n_keep = keep.count()
+        keep, st = materialize(
+            flags.where((F.col("o") == 1) & (F.col("i") == 1)).select("id"),
+            n=F.count(F.lit(1)))
+        n_keep = st["n"]
         if n_keep == n_rem:
             break
         t = (remaining.join(keep, "id", "left_anti")
@@ -870,13 +864,15 @@ def _scc_trim(remaining: DataFrame, e: DataFrame, max_rounds: int):
     if trimmed is None:
         # nothing trimmed: the caller's e is already restricted to
         # ``remaining`` — skip the no-op restriction and its checkpoint
-        return None, remaining, e
-    e = (e.join(remaining.select(F.col("id").alias("src")), "src",
-                "left_semi")
-         .join(remaining.select(F.col("id").alias("dst")), "dst",
-               "left_semi")
-         .localCheckpoint(eager=True))
-    return trimmed, remaining, e
+        return None, remaining, n_rem, e, n_e
+    e, st = materialize(_restricted(e, remaining), n=F.count(F.lit(1)))
+    return trimmed, remaining, n_rem, e, st["n"]
+
+
+def _restricted(e: DataFrame, nodes: DataFrame) -> DataFrame:
+    """The edges of ``e`` with both endpoints in ``nodes``."""
+    return (e.join(nodes.select(F.col("id").alias("src")), "src", "left_semi")
+            .join(nodes.select(F.col("id").alias("dst")), "dst", "left_semi"))
 
 
 def scc_labels(nodes: DataFrame, edges: DataFrame,
@@ -914,10 +910,12 @@ def scc_labels(nodes: DataFrame, edges: DataFrame,
     Returns (id, scc_id), scc_id = min node id in the SCC. Singleton
     SCCs (trimmed acyclic nodes) label themselves.
     """
-    remaining = (nodes.select("id").distinct().localCheckpoint(eager=True))
-    e = (edges.select("src", "dst")
-         .where(F.col("src") != F.col("dst")).distinct()
-         .localCheckpoint(eager=True))
+    n = F.count(F.lit(1))
+    remaining, st = materialize(nodes.select("id").distinct(), n=n)
+    n_rem = st["n"]
+    e, st = materialize(edges.select("src", "dst")
+                        .where(F.col("src") != F.col("dst")).distinct(), n=n)
+    n_e = st["n"]
     done = None
 
     def _acc(acc, new):
@@ -932,9 +930,10 @@ def scc_labels(nodes: DataFrame, edges: DataFrame,
         return acc.unionByName(new)
 
     for _ in range(max_peels):
-        t, remaining, e = _scc_trim(remaining, e, max_trim_rounds)
+        t, remaining, n_rem, e, n_e = _scc_trim(remaining, n_rem, e, n_e,
+                                                max_trim_rounds)
         done = _acc(done, t)
-        if remaining.isEmpty():
+        if n_rem == 0:
             return done.select("id", "scc_id")
         # r6 OPTIMIZATION: (a) propagate over the bounded-squared edge
         # relation — same closure, so the same fixpoint labels in
@@ -943,30 +942,19 @@ def scc_labels(nodes: DataFrame, edges: DataFrame,
         # jobs — run them from two driver threads so their (tiny) stages
         # interleave on the idle executor cores (guide §2.6) instead of
         # serializing two driver-blocking loops.
-        from pyspark import InheritableThread
+        from concurrent.futures import ThreadPoolExecutor
 
-        e2 = _bounded_squared(e)
-        results: dict = {}
+        from pyspark.util import inheritable_thread_target
 
-        def _run(fwd: bool):
-            try:
-                results[fwd] = _directed_min_reach(remaining, e2, fwd,
-                                                   max_prop_rounds)
-            except BaseException as exc:  # re-raised on the main thread
-                results[fwd] = exc
+        e2 = _bounded_squared(e, n_e)
 
-        th = [InheritableThread(target=_run, args=(fwd,))
-              for fwd in (True, False)]
-        for t2 in th:
-            t2.start()
-        for t2 in th:
-            t2.join()
-        for fwd in (True, False):
-            if isinstance(results[fwd], BaseException):
-                raise results[fwd]
-        f, okf = results[True]
-        b, okb = results[False]
-        if not (okf and okb):
+        @inheritable_thread_target(remaining.sparkSession)
+        def _reach(fwd: bool):
+            return _directed_min_reach(remaining, e2, fwd, max_prop_rounds)
+
+        with ThreadPoolExecutor(2) as pool:
+            f, b = pool.map(_reach, (True, False))
+        if f is None or b is None:
             raise RuntimeError(
                 f"scc_labels: reachability propagation did not converge "
                 f"in {max_prop_rounds} rounds — graph deeper than the "
@@ -976,14 +964,12 @@ def scc_labels(nodes: DataFrame, edges: DataFrame,
                  .select("id", F.col("label").alias("scc_id"))
                  .localCheckpoint(eager=True))
         done = _acc(done, newly)
-        remaining = (remaining.join(newly.select("id"), "id", "left_anti")
-                     .localCheckpoint(eager=True))
-        e = (e.join(remaining.select(F.col("id").alias("src")), "src",
-                    "left_semi")
-             .join(remaining.select(F.col("id").alias("dst")), "dst",
-                   "left_semi")
-             .localCheckpoint(eager=True))
-    if remaining.isEmpty():
+        remaining, st = materialize(
+            remaining.join(newly.select("id"), "id", "left_anti"), n=n)
+        n_rem = st["n"]
+        e, st = materialize(_restricted(e, remaining), n=n)
+        n_e = st["n"]
+    if n_rem == 0:
         return done.select("id", "scc_id")
     raise RuntimeError(
         f"scc_labels did not finish in {max_peels} peels — the graph's "
@@ -1009,15 +995,15 @@ def modularity_contrib(edges: DataFrame, labels: DataFrame,
     term as a decimal — noted, not needed at gate scale).
 
     Input edges may be directed/duplicated: normalized to distinct
-    unordered pairs, self-loops dropped. Shape: one distinct + two
-    label equi-joins + two partial aggs; m is one O(1) driver scalar.
+    unordered pairs, self-loops dropped. Shape: one distinct (pinned; m
+    is counted by that job) + two label equi-joins + two partial aggs.
     Output: (community, intra_edges, degree_sum, q_num).
     """
-    und = (edges.select(F.least(F.col(a_col), F.col(b_col)).alias("u"),
-                        F.greatest(F.col(a_col), F.col(b_col)).alias("v"))
-           .where(F.col("u") != F.col("v")).distinct()
-           .localCheckpoint(eager=True))
-    m = und.count()
+    und, st = materialize(
+        edges.select(F.least(F.col(a_col), F.col(b_col)).alias("u"),
+                     F.greatest(F.col(a_col), F.col(b_col)).alias("v"))
+        .where(F.col("u") != F.col("v")).distinct(),
+        m=F.count(F.lit(1)))
     lab = labels.select(F.col(id_col).alias("nid"),
                         F.col(label_col).alias("community"))
     deg = (und.select(F.col("u").alias("nid"))
@@ -1037,7 +1023,7 @@ def modularity_contrib(edges: DataFrame, labels: DataFrame,
                     F.coalesce(F.col("intra_edges"), F.lit(0))
                     .cast("bigint").alias("intra_edges"),
                     F.col("degree_sum").cast("bigint").alias("degree_sum"),
-                    (F.lit(4 * m) * F.coalesce(F.col("intra_edges"),
+                    (F.lit(4 * st["m"]) * F.coalesce(F.col("intra_edges"),
                                                F.lit(0))
                      - F.col("degree_sum") * F.col("degree_sum"))
                     .cast("bigint").alias("q_num")))
@@ -1059,39 +1045,24 @@ def dag_layers(nodes: DataFrame, edges: DataFrame,
     max(0, max over in-edges (u,v) of layer_k(u) + 1) — monotone
     non-decreasing, fixpoint at the true longest-path depth after
     (depth) rounds. Per round: ONE equi-join keyed by src + ONE max
-    aggregation keyed by node, O(1) driver scalars (the improved
-    count); the edge relation is pinned once (the sssp_from_seeds
-    lesson — unpinned lineage re-plans superlinearly). If the budget
+    aggregation keyed by node, O(1) driver scalars (the stall check's
+    row count and layer sum, observed by the round's checkpoint job);
+    the edge relation is pinned once (the sssp_from_seeds lesson —
+    unpinned lineage re-plans superlinearly). If the budget
     exhausts before the fixpoint the graph has a cycle (layers on a
     cycle grow forever) or a deeper-than-budget chain — raise loudly,
     never return a truncated layering (same honesty contract as
     connected_components / scc_labels).
     """
-    lay = (nodes.select("id").distinct()
-           .withColumn("layer", F.lit(0).cast("bigint"))
-           .localCheckpoint(eager=True))
     edges = (edges.select("src", "dst").distinct()
              .localCheckpoint(eager=True))
-    # r6 OPTIMIZATION: the per-round improved probe (join + count) is
-    # replaced by a (row count, layer sum) stall check — layers are
-    # monotone non-decreasing and rows only appear, so the stats stalling
-    # between consecutive rounds is exactly improved == 0. Same round
-    # count, same results; cycle detection unchanged (layers on a cycle
-    # keep growing, the stall never fires, the budget raise triggers).
-    prev = (lay.count(), 0)
-    for _ in range(max_rounds):
-        relaxed = (lay.join(edges, lay["id"] == edges["src"])
-                   .select(F.col("dst").alias("id"),
-                           (F.col("layer") + F.lit(1).cast("bigint"))
-                           .alias("layer")))
-        lay = (lay.unionByName(relaxed)
-               .groupBy("id").agg(F.max("layer").alias("layer"))
-               .localCheckpoint(eager=True))
-        stats = tuple(lay.agg(F.count(F.lit(1)),
-                              F.sum("layer")).collect()[0])
-        if stats == prev:
-            return lay
-        prev = stats
+    lay = _relax_to_fixpoint(
+        nodes.select("id").distinct()
+        .withColumn("layer", F.lit(0).cast("bigint")),
+        edges, "layer", F.col("layer") + F.lit(1).cast("bigint"), F.max,
+        max_rounds)
+    if lay is not None:
+        return lay
     raise RuntimeError(
         f"dag_layers did not converge in {max_rounds} rounds — the graph "
         f"has a cycle, or a chain deeper than the budget (raise "

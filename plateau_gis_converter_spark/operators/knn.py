@@ -22,7 +22,7 @@ wrong answer).
 At 100 TB: the point side is cell-partitioned; ring-expansion touches only
 the cells adjacent to query cells (partition pruning on the cell column);
 the iteration count is bounded (log of the sparsest region's radius). Each
-round persists `remaining` so loop-condition checks don't recompute lineage.
+round pins `remaining`, counting it in the same job for the loop condition.
 """
 
 from __future__ import annotations
@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import geo
+from .materialize import materialize
 
 INDEX_ZOOM = 12
 EARTH_R = 6371000.0
@@ -161,15 +162,16 @@ def knn_ring_expansion(spark: SparkSession, points: DataFrame,
                         F.lit(True).alias("exact"))
                 .localCheckpoint(eager=True))
         result = done if result is None else result.unionByName(done)
-        nxt = (remaining.join(done_ids, "query_id", "left_anti")
-               .localCheckpoint(eager=True))
+        nxt, st = materialize(
+            remaining.join(done_ids, "query_id", "left_anti"),
+            n=F.count(F.lit(1)))
         ranked.unpersist()
         remaining.unpersist()
         remaining = nxt
-        if not remaining.take(1):
+        if st["n"] == 0:
             break
         r *= 2
-    if remaining.take(1):
+    else:
         # Stragglers after max_rings (pathologically sparse regions): report
         # best-effort top-k from the widest ring searched, flagged
         # exact=false so approximate rows can never masquerade as exact

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import materialize
+
 # open tags only; [^>]* never crosses a tag close; (?i) works in both
 # Java regex and RE2
 ANCHOR_TAG_RE = r"(?i)<a\s[^>]*>"
@@ -129,14 +131,15 @@ def resolve_redirects(redirects: DataFrame, src_col: str = "src",
     itself is round-count-dependent, so it is never exposed).
 
     Output: (src, final, hops, status in ('ok', 'cycle')).
-    Driver footprint: one count() scalar + O(log n) round scalars.
+    Driver footprint: one row count, observed by the job that pins the
+    deduplicated map, which sets the round count.
     """
     import math
 
-    f = (redirects.groupBy(F.col(src_col).alias("s"))
-         .agg(F.min(dst_col).alias("t"))
-         .localCheckpoint(eager=True))
-    n = f.count()
+    f, st = materialize(redirects.groupBy(F.col(src_col).alias("s"))
+                        .agg(F.min(dst_col).alias("t")),
+                        n=F.count(F.lit(1)))
+    n = st["n"]
     if n == 0:
         return f.select(F.col("s").alias("src"),
                         F.col("t").alias("final"),

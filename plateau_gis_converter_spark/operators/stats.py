@@ -22,8 +22,17 @@ trade; this operator is the exact path reports and gates need.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .materialize import materialize
+
+
+def _target_rank(total: str) -> Column:
+    """ceil(q_ppm * total / 10^6) for any bigint ``total`` >= 0: split at
+    10^6, no intermediate exceeds the result (q_ppm * total would)."""
+    return F.expr(f"q_ppm * ({total} div 1000000) + "
+                  f"(q_ppm * ({total} % 1000000) + 999999) div 1000000")
 
 
 def value_quantiles(df: DataFrame, col: str,
@@ -38,10 +47,7 @@ def value_quantiles(df: DataFrame, col: str,
     # the total count n is a second window over the SAME ordered
     # single-partition relation the running sum already uses — no
     # driver collect(), so deriving n no longer forces a second pass
-    # over df's lineage before the main job. The target rank is the
-    # identical integer expression, now evaluated in the join condition
-    # (int64-safe while q * n < 2^63, i.e. n <= ~9.2e12 rows — beyond
-    # that pre-aggregate per shard first).
+    # over df's lineage before the main job.
     counts = (df.groupBy(F.col(col).alias("v"))
               .agg(F.count(F.lit(1)).alias("c")))
     w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
@@ -52,7 +58,7 @@ def value_quantiles(df: DataFrame, col: str,
     spark = df.sparkSession
     qdf = spark.createDataFrame(
         [(int(q),) for q in sorted(set(qs_ppm))], "q_ppm long")
-    tgt = F.expr("(q_ppm * n + 999999) div 1000000")
+    tgt = _target_rank("n")
     return (cum.join(F.broadcast(qdf), F.col("cum") >= tgt)
             .groupBy("q_ppm")
             .agg(F.min("v").alias("value")))
@@ -120,7 +126,7 @@ def histogram_quantiles(hist: DataFrame,
     spark = hist.sparkSession
     qdf = spark.createDataFrame(
         [(int(q),) for q in sorted(set(qs_ppm))], "q_ppm long")
-    tgt = F.expr("(q_ppm * n + 999999) div 1000000")
+    tgt = _target_rank("n")
     return (cum.join(F.broadcast(qdf), F.col("cum") >= tgt)
             .groupBy("q_ppm")
             .agg(F.min(F.struct("bin_id", "lo", "hi")).alias("b"))
@@ -261,7 +267,7 @@ def group_value_quantiles(df: DataFrame, group_col: str, col: str,
     the SAME group key (running count + group total — one Exchange),
     a broadcast of the tiny q-list, then the per-(group, q) min over
     qualifying values. All-integer target ranks: tgt = ceil(q * n / 1e6)
-    exactly as (q*n + 999999) div 1e6.
+    (``_target_rank``).
 
     Output: (group, q_ppm, value).
     """
@@ -280,7 +286,7 @@ def group_value_quantiles(df: DataFrame, group_col: str, col: str,
     spark = df.sparkSession
     qdf = spark.createDataFrame([(int(q),) for q in sorted(set(qs_ppm))],
                                 "q_ppm long")
-    tgt = F.expr("(q_ppm * n + 999999) DIV 1000000")
+    tgt = _target_rank("n")
     return (cum.crossJoin(F.broadcast(qdf))
             .where(F.col("cum") >= tgt)
             .groupBy("g", "q_ppm")
@@ -366,13 +372,13 @@ def chi2_flags(df: DataFrame, row_col: str, col_col: str,
     broadcast back; map-side flag math. Output: (row_key, col_key, o,
     r, c, n, flagged).
     """
-    cells = (df.groupBy(F.col(row_col).alias("row_key"),
-                        F.col(col_col).alias("col_key"))
-             .agg(F.count(F.lit(1)).alias("o")))
-    cells = cells.localCheckpoint(eager=True)
+    cells, st = materialize(df.groupBy(F.col(row_col).alias("row_key"),
+                                       F.col(col_col).alias("col_key"))
+                            .agg(F.count(F.lit(1)).alias("o")),
+                            n=F.sum("o"))
+    n_total = st["n"]
     rows = cells.groupBy("row_key").agg(F.sum("o").alias("r"))
     colm = cells.groupBy("col_key").agg(F.sum("o").alias("c"))
-    n_total = cells.agg(F.sum("o")).collect()[0][0]
     dev = (F.col("o") * F.lit(n_total) - F.col("r") * F.col("c"))
     return (cells.join(F.broadcast(rows), "row_key")
             .join(F.broadcast(colm), "col_key")
@@ -1552,7 +1558,7 @@ def weighted_group_quantiles(df: DataFrame, group_col: str, col: str,
     spark = df.sparkSession
     qdf = spark.createDataFrame([(int(q),) for q in sorted(set(qs_ppm))],
                                 "q_ppm long")
-    tgt = F.expr("(q_ppm * tw + 999999) DIV 1000000")
+    tgt = _target_rank("tw")
     return (cum.crossJoin(F.broadcast(qdf))
             .where(F.col("cum") >= tgt)
             .groupBy("g", "q_ppm")

@@ -54,6 +54,21 @@ def test_histogram_quantile_brackets_exact(spark, docs):
         assert lo <= exact[q] < hi, (q, lo, exact[q], hi)
 
 
+def test_target_rank_is_exact_up_to_int64_max(spark):
+    """ceil(q * n / 10^6) for totals where the unsplit q * n + 999999
+    overflows int64 (ANSI mode raises from n = 9,223,372,036,854 at
+    q = 10^6), up to 2^63 - 1; the reference is Python's exact integer
+    ceiling."""
+    qs = [1, 500_000, 999_999, 1_000_000]
+    totals = [0, 1, 999_999, 1_000_000, 9_223_372_036_853,
+              9_223_372_036_854, 9_223_372_036_855, 2**63 - 1]
+    df = spark.createDataFrame([(q, n) for q in qs for n in totals],
+                               "q_ppm long, tw long")
+    got = {(r["q_ppm"], r["tw"]): r["t"] for r in df.select(
+        "q_ppm", "tw", st._target_rank("tw").alias("t")).collect()}
+    assert got == {(q, n): -(-q * n // 10**6) for q in qs for n in totals}
+
+
 def test_bottom_k_merge_and_uniformity(spark, docs):
     """Merging two shards' sketches (union, keep k smallest) equals the
     whole-corpus sketch; ungrouped sketch is k rows."""

@@ -1,6 +1,6 @@
 """The package's settings surface: two deployment variables from the
 environment, Spark's own AQE defaults and two fixed codegen settings,
-nothing else."""
+nothing else; and one module that observes metrics."""
 import pathlib
 import re
 
@@ -31,6 +31,15 @@ def test_package_reads_only_the_deployment_variables():
             reads.update(names)
     assert not unnamed, f"environment read without a literal name: {unnamed}"
     assert reads == DEPLOYMENT_VARS
+
+
+def test_only_materialize_observes_metrics():
+    """Statistics read from a pinned relation go through
+    ``operators.materialize``: no other module observes metrics."""
+    users = {str(path.relative_to(PACKAGE))
+             for path in PACKAGE.rglob("*.py")
+             if re.search(r"\bObservation\b|\.observe\(", path.read_text())}
+    assert users == {"operators/materialize.py"}
 
 
 def test_get_spark_keeps_the_aqe_settings(spark):
