@@ -54,6 +54,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_relation
+
 # ICANN-section two-label public suffixes, trimmed to high-crawl-volume
 # ccTLDs (snapshot of publicsuffix.org; public data).
 MULTIPART_SUFFIXES: tuple[str, ...] = (
@@ -238,8 +240,8 @@ DEFAULT_RULES = parse_rules(ICANN_RULES)
 def psl_df(spark, include_private: bool = False) -> DataFrame:
     """The snapshot as a one-column DataFrame ``(rule)`` in raw PSL line
     format — the shape a runtime-supplied full PSL would arrive in."""
-    return spark.createDataFrame(
-        [(s,) for s in suffixes(include_private)], "rule: string")
+    return local_relation(
+        spark, [(s,) for s in suffixes(include_private)], "rule: string")
 
 
 def _last_labels(host: Column, n: int) -> Column:

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_relation
 from .text import TOKEN_SPLIT
 
 
@@ -866,9 +867,8 @@ def sorted_neighborhood_pairs(df: DataFrame, key_col: str, block_col: str,
     for pid in sorted(totals):
         offsets[pid] = acc
         acc += totals[pid]
-    spark = df.sparkSession
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "pid: int, off: long")
+    off_df = local_relation(df.sparkSession, offsets.items(),
+                            "pid: int, off: long")
     w = Window.partitionBy("pid").orderBy("b", "k")
     ranked = (part.join(F.broadcast(off_df), "pid")
               .withColumn("rank", (F.col("off")

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.local import local_relation
 from .materialize import materialize
 
 BASE_PPM = 1_000_000
@@ -635,8 +636,8 @@ def k_core(edges: DataFrame, k: int, max_iters: int = 30) -> DataFrame:
             return core.select(F.col("u").cast("bigint").alias("id"),
                                F.col("deg").cast("bigint").alias("deg"))
         if n_alive == 0:
-            return sym.sparkSession.createDataFrame(
-                [], "id bigint, deg bigint")
+            return local_relation(sym.sparkSession, [],
+                                  "id bigint, deg bigint")
         prev_alive = n_alive
         alive = core.select("u")
         sym = (sym.join(alive, "u", "left_semi")
@@ -907,14 +908,22 @@ def scc_labels(nodes: DataFrame, edges: DataFrame,
     budget exhaustion — a partial SCC labeling has no safe use (same
     honesty rule as connected_components).
 
-    Returns (id, scc_id), scc_id = min node id in the SCC. Singleton
-    SCCs (trimmed acyclic nodes) label themselves.
+    Returns (id, scc_id), scc_id = min node id in the SCC, for exactly
+    the ids in ``nodes``: edges with an endpoint outside it are ignored.
+    Singleton SCCs (trimmed acyclic nodes) label themselves.
     """
     n = F.count(F.lit(1))
     remaining, st = materialize(nodes.select("id").distinct(), n=n)
     n_rem = st["n"]
-    e, st = materialize(edges.select("src", "dst")
-                        .where(F.col("src") != F.col("dst")).distinct(), n=n)
+    if n_rem == 0:
+        return local_relation(nodes.sparkSession, [],
+                              "id bigint, scc_id bigint")
+    # an edge with an endpoint outside ``nodes`` would carry that id
+    # into the first peel's closures and out as a label
+    e, st = materialize(
+        _restricted(edges.select("src", "dst")
+                    .where(F.col("src") != F.col("dst")).distinct(),
+                    remaining), n=n)
     n_e = st["n"]
     done = None
 

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.local import local_relation
 from .text import token_count
 
 
@@ -58,16 +59,17 @@ def pack_concat_chunks(docs: DataFrame, budget: int,
     part = (d.withColumn("pid", F.spark_partition_id())
             .localCheckpoint(eager=True))
 
-    # O(partitions) rows to the driver — partition totals, not data
+    # O(partitions) rows to the driver — partition totals, not data. The
+    # prefix offsets go back as a local relation: the broadcast reads a
+    # LocalTableScan and starts no Python worker.
     totals = {r["pid"]: r["tot"] for r in
               part.groupBy("pid").agg(F.sum("ntok").alias("tot")).collect()}
     offsets, acc = {}, 0
     for pid in sorted(totals):
         offsets[pid] = acc
         acc += totals[pid] or 0
-    spark = docs.sparkSession
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "pid: int, off: long")
+    off_df = local_relation(docs.sparkSession, offsets.items(),
+                            "pid: int, off: long")
 
     w = Window.partitionBy("pid").orderBy("k")
     cum_incl = F.sum("ntok").over(w)

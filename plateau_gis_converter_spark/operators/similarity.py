@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.local import local_relation
+
 EMB_SCALE = 10_000          # embedding quantization (e4)
 PLANE_SCALE = 1_000_000     # plane coefficient = numerator / PLANE_SCALE
 
@@ -261,8 +263,8 @@ def cosine_topk_ivf(embeddings: DataFrame, queries: DataFrame, k: int = 5,
     # top-k/refinement scan twice. This is bounded driver metadata, not a
     # data collect.
     cent_rows = [(r["cent_id"], list(r["c_qe"])) for r in cents.collect()]
-    cents = embeddings.sparkSession.createDataFrame(
-        cent_rows, schema="cent_id bigint, c_qe array<bigint>")
+    cents = local_relation(embeddings.sparkSession, cent_rows,
+                           "cent_id bigint, c_qe array<bigint>")
     idx = ivf_assign(embeddings, cents=cents)
     q = queries.select("query_id", quantized_embedding(F.col("embedding"))
                        .alias("q_qe"))
@@ -312,9 +314,8 @@ def write_ivf_index(embeddings: DataFrame, path: str,
     if lloyd_iters > 0:
         cents = ivf_kmeans_refine(embeddings, cents, lloyd_iters)
     cent_rows = [(r["cent_id"], list(r["c_qe"])) for r in cents.collect()]
-    spark = embeddings.sparkSession
-    cents_local = spark.createDataFrame(
-        cent_rows, schema="cent_id bigint, c_qe array<bigint>")
+    cents_local = local_relation(embeddings.sparkSession, cent_rows,
+                                 "cent_id bigint, c_qe array<bigint>")
     cents_local.coalesce(1).write.mode("overwrite").parquet(
         f"{path}/centroids")
     (ivf_assign(embeddings, cents=cents_local)

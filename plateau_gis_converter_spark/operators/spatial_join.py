@@ -44,6 +44,7 @@ from ..functions import geo
 from ..kernels import clip as clip_kernel
 from ..kernels import pip as pip_kernel
 from ..operators.tile_assign import rings_udeg_to_mercator
+from ..sources.local import local_relation
 
 INDEX_ZOOM = 12
 
@@ -128,8 +129,9 @@ def spatial_join_points(spark: SparkSession, points: DataFrame,
     points match BOTH adjacent wards — deterministic and identical to the
     SQL oracle (fixtures.PIP_CONVEX_SQL). Any other polygon set takes the
     even-odd kernel. Points with a NULL coordinate match nothing. The
-    broadcast index is deduplicated on the driver (it is tiny), which
-    saves a Spark job.
+    broadcast index is built and deduplicated on the driver (it is tiny)
+    and enters the plan as a local relation: a ``LocalTableScan`` under
+    the broadcast, which starts no Python worker.
     """
     index = boundary_cell_index(boundary_records, index_zoom)
     pts = _with_cells(points, index_zoom)
@@ -140,8 +142,8 @@ def spatial_join_points(spark: SparkSession, points: DataFrame,
                  *[v for xy in r["rings_udeg"][0] for v in xy])
                 for r in index]
         corners = ("x1", "y1", "x2", "y2", "x3", "y3", "x4", "y4")
-        cells = spark.createDataFrame(
-            list(dict.fromkeys(rows)),
+        cells = local_relation(
+            spark, dict.fromkeys(rows),
             "_cell: long, ward_code: string, "
             + ", ".join(f"{c}: long" for c in corners))
         pip = (_cross_ge0("x1", "y1", "x2", "y2")
@@ -153,9 +155,9 @@ def spatial_join_points(spark: SparkSession, points: DataFrame,
                 .drop(*private, *corners))
 
     # general polygons: Arrow-batched exact even-odd PIP kernel
-    cells = spark.createDataFrame(
-        list(dict.fromkeys((_cell_key(r, index_zoom), r["ward_code"])
-                           for r in index)),
+    cells = local_relation(
+        spark, dict.fromkeys((_cell_key(r, index_zoom), r["ward_code"])
+                             for r in index),
         "_cell: long, ward_code: string")
     rings_lookup = {
         r["ward_code"]: [np.asarray(ring, dtype=np.int64)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.local import local_relation
 from .materialize import materialize
 
 
@@ -55,9 +56,9 @@ def value_quantiles(df: DataFrame, col: str,
                                            Window.unboundedFollowing)
     cum = (counts.withColumn("cum", F.sum("c").over(w))
            .withColumn("n", F.sum("c").over(wall)))
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(q),) for q in sorted(set(qs_ppm))], "q_ppm long")
+    qdf = local_relation(df.sparkSession,
+                         [(int(q),) for q in sorted(set(qs_ppm))],
+                         "q_ppm long")
     tgt = _target_rank("n")
     return (cum.join(F.broadcast(qdf), F.col("cum") >= tgt)
             .groupBy("q_ppm")
@@ -123,9 +124,9 @@ def histogram_quantiles(hist: DataFrame,
         Window.unboundedPreceding, Window.unboundedFollowing)
     cum = (hist.withColumn("cum", F.sum("cnt").over(w))
            .withColumn("n", F.sum("cnt").over(wall)))
-    spark = hist.sparkSession
-    qdf = spark.createDataFrame(
-        [(int(q),) for q in sorted(set(qs_ppm))], "q_ppm long")
+    qdf = local_relation(hist.sparkSession,
+                         [(int(q),) for q in sorted(set(qs_ppm))],
+                         "q_ppm long")
     tgt = _target_rank("n")
     return (cum.join(F.broadcast(qdf), F.col("cum") >= tgt)
             .groupBy("q_ppm")
@@ -283,9 +284,9 @@ def group_value_quantiles(df: DataFrame, group_col: str, col: str,
     wall = Window.partitionBy("g")
     cum = (counts.withColumn("cum", F.sum("c").over(wcum))
            .withColumn("n", F.sum("c").over(wall)))
-    spark = df.sparkSession
-    qdf = spark.createDataFrame([(int(q),) for q in sorted(set(qs_ppm))],
-                                "q_ppm long")
+    qdf = local_relation(df.sparkSession,
+                         [(int(q),) for q in sorted(set(qs_ppm))],
+                         "q_ppm long")
     tgt = _target_rank("n")
     return (cum.crossJoin(F.broadcast(qdf))
             .where(F.col("cum") >= tgt)
@@ -1555,9 +1556,9 @@ def weighted_group_quantiles(df: DataFrame, group_col: str, col: str,
     wall = Window.partitionBy("g")
     cum = (counts.withColumn("cum", F.sum("w").over(wcum))
            .withColumn("tw", F.sum("w").over(wall)))
-    spark = df.sparkSession
-    qdf = spark.createDataFrame([(int(q),) for q in sorted(set(qs_ppm))],
-                                "q_ppm long")
+    qdf = local_relation(df.sparkSession,
+                         [(int(q),) for q in sorted(set(qs_ppm))],
+                         "q_ppm long")
     tgt = _target_rank("tw")
     return (cum.crossJoin(F.broadcast(qdf))
             .where(F.col("cum") >= tgt)
@@ -1956,10 +1957,8 @@ def lorenz_points(df: DataFrame, value_col: str,
            .withColumn("n", F.sum("c").over(wall))
            .withColumn("tot", F.sum(F.col("v") * F.col("c"))
                        .over(wall)))
-    spark = df.sparkSession
-    pts = spark.createDataFrame([(int(i),) for i in
-                                 range(1, int(n_points) + 1)],
-                                "point long")
+    pts = (df.sparkSession.range(1, int(n_points) + 1)
+           .withColumnRenamed("id", "point"))
     tgt = F.expr(f"(point * n + {int(n_points)} - 1) "
                  f"div {int(n_points)}")
     return (cum.crossJoin(F.broadcast(pts))

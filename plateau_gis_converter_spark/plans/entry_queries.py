@@ -31,6 +31,7 @@ from ..operators import spatial_join as sj
 from ..operators import text as tx
 from ..operators import tile_assign as ta
 from ..sources import fixtures as fx
+from ..sources.local import local_relation
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -5526,8 +5527,8 @@ def q_mor_read(spark, sf_dir):
                .select(fp.alias("file_path"),
                        (did % 50).cast("bigint").alias("pos"),
                        (did % 5).cast("bigint").alias("delete_seq")))
-    eq_del = spark.createDataFrame(
-        [("de", 2), ("fr", 5)], "lang string, delete_seq bigint")
+    eq_del = local_relation(
+        spark, [("de", 2), ("fr", 5)], "lang string, delete_seq bigint")
     return ly.merge_on_read(data, pos_del, eq_del, eq_cols=["lang"])
 
 
@@ -6667,8 +6668,8 @@ def q_ward_density(spark, sf_dir):
     for rec in recs:
         for i, (x, y) in enumerate(rec["rings_udeg"][0]):
             rows.append((rec["ward_code"], i, x, y))
-    verts = spark.createDataFrame(rows, "poly_id string, i int, "
-                                        "x long, y long")
+    verts = local_relation(spark, rows,
+                           "poly_id string, i int, x long, y long")
     geom = gm.ring_area2_centroid(verts).withColumnRenamed(
         "poly_id", "ward_code")
     return (counts.join(geom.select("ward_code", "area2_udeg2"),
@@ -6720,8 +6721,8 @@ def q_ward_geometry(spark, sf_dir):
         ring = rec["rings_udeg"][0]
         for i, (x, y) in enumerate(ring):
             rows.append((rec["ward_code"], i, x, y))
-    verts = spark.createDataFrame(rows, "poly_id string, i int, "
-                                        "x long, y long")
+    verts = local_relation(spark, rows,
+                           "poly_id string, i int, x long, y long")
     return gm.ring_area2_centroid(verts).withColumnRenamed(
         "poly_id", "ward_code")
 
@@ -7955,7 +7956,8 @@ def q_cidr_lpm(spark, sf_dir):
         "doc_id",
         f"(1 + (({_CIDR_H}) div 16777216) % 16) * 16777216"
         f" + ({_CIDR_H}) % 16777216 AS ip")
-    pfx = spark.createDataFrame(
+    pfx = local_relation(
+        spark,
         [(o1 * 16777216 + o2 * 65536 + o3 * 256 + o4, plen, label)
          for o1, o2, o3, o4, plen, label in _CIDR_PREFIXES],
         "net bigint, plen int, label string")

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.local import local_relation
+
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
     T.StructField("stage", T.StringType()),
@@ -97,7 +99,7 @@ class LineageLog:
                     rows.append((rec["run_id"], rec["stage"],
                                  rec["partition_key"], rec.get("rows_out", 0),
                                  rec.get("bytes_out", 0), rec.get("wall_ms", 0)))
-        return self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
+        return local_relation(self.spark, rows, LINEAGE_SCHEMA)
 
 
 def run_stage_partitioned(df: DataFrame, stage: str, key_col: str,
@@ -125,9 +127,9 @@ def run_stage_partitioned(df: DataFrame, stage: str, key_col: str,
 
     done = lineage.completed_partitions(stage)
     if done:
-        done_df = lineage.spark.createDataFrame(
-            [(k,) for k in done], T.StructType(
-                [T.StructField(key_col, T.StringType())]))
+        done_df = local_relation(
+            lineage.spark, [(k,) for k in done],
+            T.StructType([T.StructField(key_col, T.StringType())]))
         df = df.join(F.broadcast(done_df),
                      df[key_col].cast("string") == done_df[key_col], "left_anti")
 

@@ -249,6 +249,8 @@ def boundaries_df(spark):
     """Boundaries as a (small) Spark DataFrame — the broadcast side."""
     from pyspark.sql import types as T
 
+    from .local import local_relation
+
     schema = T.StructType([
         T.StructField("ward_code", T.StringType(), False),
         T.StructField("ward_name", T.StringType(), False),
@@ -262,13 +264,15 @@ def boundaries_df(spark):
     rows = [(r["ward_code"], r["ward_name"], r["typename"], r["feature_id"],
              [[[int(x), int(y)] for x, y in ring] for ring in r["rings_udeg"]],
              r["attributes"]) for r in boundaries_records()]
-    return spark.createDataFrame(rows, schema)
+    return local_relation(spark, rows, schema)
 
 
 def lines_df(spark):
     """Deterministic line features (river/rail style) for the line sink
     paths: (typename, feature_id, name, paths_udeg, attributes)."""
     from pyspark.sql import types as T
+
+    from .local import local_relation
 
     schema = T.StructType([
         T.StructField("typename", T.StringType(), False),
@@ -289,13 +293,15 @@ def lines_df(spark):
          [[[139_620_000, 35_580_000], [139_640_000, 35_620_000]]],
          {"tran:function": "subway"}),
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_relation(spark, rows, schema)
 
 
 def points_df(spark):
     """Deterministic point features (station style) for the point sink
     paths: (typename, feature_id, name, points_udeg, attributes)."""
     from pyspark.sql import types as T
+
+    from .local import local_relation
 
     schema = T.StructType([
         T.StructField("typename", T.StringType(), False),
@@ -314,7 +320,7 @@ def points_df(spark):
          [[139_766_000, 35_681_000]],
          {"frn:class": "kiosk"}),
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_relation(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------

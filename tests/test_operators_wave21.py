@@ -53,6 +53,24 @@ def test_scc_raises_on_peel_budget(spark):
         0: 0, 1: 0, 2: 2, 3: 2, 4: 4, 5: 4}
 
 
+def test_scc_ignores_edges_leaving_the_node_set(spark):
+    # 5 is no node: the cycle 0 -> 1 -> 5 -> 0 through it must not
+    # label 5, and the first trim removes nothing here
+    n, e = _g(spark, [0, 1], [(0, 1), (1, 0), (1, 5), (5, 0)])
+    got = sorted(tuple(r) for r in gr.scc_labels(n, e).collect())
+    assert got == [(0, 0), (1, 0)]
+
+
+def test_scc_of_no_nodes_is_empty(spark):
+    n = spark.createDataFrame([], "id bigint")
+    e = spark.createDataFrame([(0, 1)], "src bigint, dst bigint")
+    got = gr.scc_labels(n, e)
+    assert got.collect() == []
+    assert got.columns == ["id", "scc_id"]
+    assert [f.dataType.simpleString() for f in got.schema] == [
+        "bigint", "bigint"]
+
+
 def test_edit_distance_pairs_matches_bruteforce(spark):
     import itertools
     strs = ["kitten", "sitten", "sittin", "sitting", "kitte",

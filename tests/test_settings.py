@@ -1,6 +1,7 @@
 """The package's settings surface: two deployment variables from the
 environment, Spark's own AQE defaults and two fixed codegen settings,
-nothing else; and one module that observes metrics."""
+nothing else; one module that observes metrics and one that builds
+relations on the driver."""
 import pathlib
 import re
 
@@ -40,6 +41,15 @@ def test_only_materialize_observes_metrics():
              for path in PACKAGE.rglob("*.py")
              if re.search(r"\bObservation\b|\.observe\(", path.read_text())}
     assert users == {"operators/materialize.py"}
+
+
+def test_only_local_relation_creates_dataframes():
+    """Relations built on the driver go through ``sources.local``, so
+    none is planned as a scan of a Python RDD."""
+    users = {str(path.relative_to(PACKAGE))
+             for path in PACKAGE.rglob("*.py")
+             if "createDataFrame(" in path.read_text()}
+    assert users == {"sources/local.py"}
 
 
 def test_get_spark_keeps_the_aqe_settings(spark):
