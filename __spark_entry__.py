@@ -3,8 +3,8 @@
 ``entry(spark)`` — flagship geocode → tile-assign → broadcast spatial-join
 pipeline at sf0.001. ``queries()`` / ``oracle_sql()`` — one entry per
 implemented operator from SURVEY.md §2, backed by
-``plateau_gis_converter_spark.plans.entry_queries`` (Spark implementation +
-DuckDB oracle pairs; rows-only entries omit the oracle).
+``plateau_gis_converter_spark.plans.entry_queries``: each gate is declared
+once with ``@gate(oracle_sql)``, so every query has its DuckDB oracle.
 """
 
 from __future__ import annotations

@@ -18,8 +18,8 @@ integer key. Dense-city skew is the adaptive-cell-split operator's job
 
 Cross-engine determinism: the haversine chain keeps ONE op order
 (sin/cos/asin/sqrt on doubles — same bytes in both engines per the
-entry_queries module-header rule) and quantizes to integer millimeters
-before the threshold compare, so the gate hash-matches.
+header rule of plans/entry_queries/_common.py) and quantizes to integer
+millimeters before the threshold compare, so the gate hash-matches.
 
 Latitude-band note: the µdeg cell edge is sized with cos(band_lat) for
 the longitude axis; a global corpus would size cells per latitude band

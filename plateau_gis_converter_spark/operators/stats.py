@@ -527,8 +527,9 @@ def mann_kendall(events: DataFrame, key_col: str = "event_type",
                 correction Z = (S - sign(S)) / sqrt(Var), Z^2 > 1.96^2
                 becomes the integer test
                 180000 * (|S| - 1)^2 > 38416 * var18
-                (38416 = 1.96^2 * 10^4; both sides i64 for spans up to
-                ~40 years of days).
+                (38416 = 1.96^2 * 10^4), evaluated in decimal(38,0):
+                in int64 the left side overflows past 3,784 days for a
+                strictly monotone series.
 
     Shape: the pairwise sum is a per-key self-join of the CALENDAR grid
     (span^2/2 rows per key, bounded by the calendar — 30 days = 435
@@ -569,8 +570,8 @@ def mann_kendall(events: DataFrame, key_col: str = "event_type",
     out = var.join(s, "k")
     abs_s = F.abs(F.col("s_stat"))
     sig = ((F.col("s_stat") != 0)
-           & (F.lit(180000) * (abs_s - 1) * (abs_s - 1)
-              > F.lit(38416) * F.col("var18")))
+           & (F.lit(180000).cast("decimal(38,0)") * (abs_s - 1) * (abs_s - 1)
+              > F.lit(38416).cast("decimal(38,0)") * F.col("var18")))
     trend = (F.when(sig & (F.col("s_stat") > 0), 1)
              .when(sig & (F.col("s_stat") < 0), -1)
              .otherwise(0).cast("bigint"))
@@ -600,11 +601,12 @@ def pettitt_shift(events: DataFrame, key_col: str = "event_type",
     the change day is the smallest maximizing t (deterministic), both
     picked by ONE max(struct) partial agg — no row windows over the
     fact, no driver roundtrip. Significance at 95% is the approximate
-    p = 2 exp(-6 K^2 / (n^3 + n^2)) < 0.05, decided in pure int64:
+    p = 2 exp(-6 K^2 / (n^3 + n^2)) < 0.05, decided in integers:
 
         6_000_000 * K^2 > 3_688_879 * (n^3 + n^2)
-        (3_688_879 = ceil-free 10^6 * ln(2 / 0.05); both sides i64 for
-        spans up to ~60 years of days).
+        (3_688_879 = ceil-free 10^6 * ln(2 / 0.05)), evaluated in
+        decimal(38,0): in int64 the left side overflows past 2,226 days
+        for a step at mid-span, where K = n^2 / 4.
 
     Output: (key, n_days, u_stat, k_stat, change_day, shifted) —
     u_stat signed (positive = level stepped DOWN after change_day,
@@ -641,8 +643,9 @@ def pettitt_shift(events: DataFrame, key_col: str = "event_type",
                  F.max(F.struct(F.abs(F.col("u")).alias("a"),
                                 (-F.col("d")).alias("nd"),
                                 F.col("u").alias("u"))).alias("m")))
-    shifted = (F.lit(6_000_000) * F.col("m.a") * F.col("m.a")
-               > F.lit(3_688_879)
+    shifted = (F.lit(6_000_000).cast("decimal(38,0)")
+               * F.col("m.a") * F.col("m.a")
+               > F.lit(3_688_879).cast("decimal(38,0)")
                * (F.col("n_days") * F.col("n_days") * F.col("n_days")
                   + F.col("n_days") * F.col("n_days")))
     return best.select(
@@ -674,13 +677,17 @@ def spearman_group_corr(df: DataFrame, group_col: str, x_col: str,
         r_milli = floor(num / sqrt(den1_d * den2_d) * 1000 + 0.5)
         num  = n*Sxy - Sx*Sy,  den1 = n*Sxx - Sx^2,  den2 likewise.
 
-    i64 bound: n * (2n)^2 <= 2^63 requires n <= ~1.3e6 rows per group;
-    larger groups emit NULL r_milli (overflow-poisoned moments are
-    never reported) — per-key daily/monthly series are thousands of
+    i64 bound: the widest product is n * Sxx, and Sxx is largest
+    without ties (sum of (2i)^2), so n * Sxx <= 2n^2 (n+1)(2n+1) / 3
+    stays below 2^63 up to n = 51,284 rows per group. Larger groups emit
+    NULL num, den1, den2 and r_milli; the products are never evaluated
+    past the bound, and the moment sums (which overflow past 1,905,388
+    rows) are try_sums. Per-key daily/monthly series are thousands of
     points, far inside the bound.
 
     Output: (group, n, num, den1, den2, r_milli); r_milli NULL when a
-    side is constant (den = 0) or the group exceeds the exact bound.
+    side is constant (den = 0), all four NULL when the group exceeds
+    the exact bound.
     """
     g = F.col(group_col)
     # r6: base feeds three branches (both rank derivations and the
@@ -703,16 +710,16 @@ def spearman_group_corr(df: DataFrame, group_col: str, x_col: str,
               .join(doubled("y", "r2y"), ["g", "y"]))
     m = ranked.groupBy("g").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("r2x").cast("bigint").alias("sx"),
-        F.sum("r2y").cast("bigint").alias("sy"),
-        F.sum(F.col("r2x") * F.col("r2y")).cast("bigint").alias("sxy"),
-        F.sum(F.col("r2x") * F.col("r2x")).cast("bigint").alias("sxx"),
-        F.sum(F.col("r2y") * F.col("r2y")).cast("bigint").alias("syy"))
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    den1 = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    den2 = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    r = F.when((F.col("den1") > 0) & (F.col("den2") > 0)
-               & (F.col("n") <= 1_300_000),
+        F.try_sum("r2x").cast("bigint").alias("sx"),
+        F.try_sum("r2y").cast("bigint").alias("sy"),
+        F.try_sum(F.col("r2x") * F.col("r2y")).cast("bigint").alias("sxy"),
+        F.try_sum(F.col("r2x") * F.col("r2x")).cast("bigint").alias("sxx"),
+        F.try_sum(F.col("r2y") * F.col("r2y")).cast("bigint").alias("syy"))
+    exact = F.col("n") <= 51_284
+    num = F.when(exact, F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
+    den1 = F.when(exact, F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
+    den2 = F.when(exact, F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
+    r = F.when((F.col("den1") > 0) & (F.col("den2") > 0),
                F.floor(F.col("num").cast("double")
                        / F.sqrt(F.col("den1").cast("double")
                                 * F.col("den2").cast("double"))

@@ -4,7 +4,7 @@
   per-tile counts with a watermark (the streaming analog of the MVT sink's
   per-tile aggregation).
 * ``streaming_sessionize`` — session windows per user (the batch analog is
-  plans/entry_queries.q_events_sessionize).
+  plans/entry_queries/relational.q_events_sessionize).
 
 Tested with the rate / file sources in tests/test_streaming.py; production
 would swap in Kafka with identical plans.

@@ -48,7 +48,7 @@ def _spark(app: str, shuffle_partitions: int) -> SparkSession:
 def _pages(spark: SparkSession, sf_dir: str):
     """documents parquet → the derived Common-Crawl-style pages layer
     (url + text embedding deterministic geo coordinates), same derivation
-    as plans/entry_queries.q_geocode."""
+    as plans/entry_queries/spatial.q_geocode."""
     from plateau_gis_converter_spark.functions import geo
 
     docs = spark.read.parquet(f"{sf_dir.rstrip('/')}/documents.parquet")

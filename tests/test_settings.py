@@ -1,7 +1,7 @@
 """The package's settings surface: two deployment variables from the
 environment, Spark's own AQE defaults and two fixed codegen settings,
 nothing else; one module that observes metrics and one that builds
-relations on the driver."""
+relations on the driver; gate modules of at most 1,500 lines."""
 import pathlib
 import re
 
@@ -50,6 +50,15 @@ def test_only_local_relation_creates_dataframes():
              for path in PACKAGE.rglob("*.py")
              if "createDataFrame(" in path.read_text()}
     assert users == {"sources/local.py"}
+
+
+def test_gate_modules_stay_small():
+    """Gates are declared in one module per operator family; none of
+    those modules grows past 1,500 lines."""
+    sizes = {path.name: len(path.read_text().splitlines())
+             for path in (PACKAGE / "plans" / "entry_queries").glob("*.py")}
+    assert len(sizes) > 1
+    assert max(sizes.values()) <= 1500, sizes
 
 
 def test_get_spark_keeps_the_aqe_settings(spark):
