@@ -124,36 +124,30 @@ def _hash64_15hex(c):
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
 
 
-def minhash_signatures(docs: DataFrame, num_hashes: int = 16, n: int = 3,
-                       text_col: str = "text") -> DataFrame:
-    """(doc_id, sig: array<bigint>) — k min-hash values per doc.
-
-    Permutation family: h_i(s) = (a_i * h(s) + b_i) mod p with fixed a/b and
-    the md5-derived base hash — deterministic across engines/runs.
-    One groupBy(doc_id) shuffle; signature width is constant (k), so state
-    per key is O(k) regardless of doc size — safe at 10^12 rows.
-    """
+def _doc_sketch(docs: DataFrame, num_hashes: int, n: int,
+                text_col: str) -> DataFrame:
+    """(doc_id, sig, arr): k min-hash values and the shingle list (a set:
+    ``shingles()`` is distinct per doc) from one groupBy(doc_id).
+    h_i(s) = (a_i * h(s) + b_i) mod p with fixed a/b and the md5-derived
+    base hash — deterministic across engines/runs."""
     p = (1 << 31) - 1  # Mersenne prime; (h % p) * a + b stays < 2^63
     sh = shingles(docs, n, text_col).withColumn("h", _hash64_15hex(F.col("shingle")))
-    aggs = []
-    for i in range(num_hashes):
-        a = 2 * i + 1
-        b = 104729 * (i + 1)
-        aggs.append(F.min((F.col("h") % p * a + b) % p).alias(f"mh{i}"))
-    sig = sh.groupBy("doc_id").agg(*aggs)
-    return sig.select("doc_id", F.array(*[f"mh{i}" for i in range(num_hashes)])
-                      .alias("sig"))
+    aggs = [F.min((F.col("h") % p * (2 * i + 1) + 104729 * (i + 1)) % p)
+            .alias(f"mh{i}") for i in range(num_hashes)]
+    sk = sh.groupBy("doc_id").agg(*aggs, F.collect_list("shingle").alias("arr"))
+    return sk.select("doc_id", F.array(*[f"mh{i}" for i in range(num_hashes)])
+                     .alias("sig"), "arr")
 
 
-def lsh_buckets(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
-                n: int = 3, text_col: str = "text") -> DataFrame:
-    """(doc_id, band, key) LSH bucket rows: the signature split into
-    ``bands`` bands of num_hashes/bands values, each band md5-folded to a
-    bucket key.  This relation IS the persistable dedup index — write it
-    once per snapshot and probe it with new docs' bucket rows
-    (operators/incremental.py) instead of re-shingling the corpus."""
+def minhash_signatures(docs: DataFrame, num_hashes: int = 16, n: int = 3,
+                       text_col: str = "text") -> DataFrame:
+    """(doc_id, sig: array<bigint>) — k min-hash values per doc; O(k) state
+    per key regardless of doc size (column pruning drops ``arr``)."""
+    return _doc_sketch(docs, num_hashes, n, text_col).select("doc_id", "sig")
+
+
+def _bands(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(docs, num_hashes, n, text_col)
     band_cols = []
     for bi in range(bands):
         parts = [F.col("sig")[i].cast("string")
@@ -165,14 +159,8 @@ def lsh_buckets(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
                     F.col("bk.key").alias("key")))
 
 
-def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 16,
-                           bands: int = 4, n: int = 3,
-                           text_col: str = "text") -> DataFrame:
-    """LSH candidate pairs: docs agreeing on any full band are candidates.
-    Output (doc_a < doc_b) distinct."""
-    buckets = lsh_buckets(docs, num_hashes, bands, n, text_col)
-    a = buckets.alias("a")
-    b = buckets.alias("b")
+def _bucket_pairs(buckets: DataFrame) -> DataFrame:
+    a, b = buckets.alias("a"), buckets.alias("b")
     return (a.join(b, (F.col("a.band") == F.col("b.band"))
                    & (F.col("a.key") == F.col("b.key"))
                    & (F.col("a.doc_id") < F.col("b.doc_id")))
@@ -181,30 +169,30 @@ def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 16,
             .distinct())
 
 
-def jaccard_verify(cand: DataFrame, sh: DataFrame,
-                   threshold: float) -> DataFrame:
-    """Exact shingle-set Jaccard over candidate (doc_a, doc_b) pairs.
-    ``sh`` must carry distinct (doc_id, shingle) rows for every doc
-    appearing in ``cand`` (the ``shingles()`` contract).
+def lsh_buckets(docs: DataFrame, num_hashes: int = 16, bands: int = 4,
+                n: int = 3, text_col: str = "text") -> DataFrame:
+    """(doc_id, band, key) LSH bucket rows: the signature split into
+    ``bands`` bands of num_hashes/bands values, each band md5-folded to a
+    bucket key.  This relation IS the persistable dedup index — write it
+    once per snapshot and probe it with new docs' bucket rows
+    (operators/incremental.py) instead of re-shingling the corpus."""
+    return _bands(minhash_signatures(docs, num_hashes, n, text_col),
+                  num_hashes, bands)
 
-    r6 OPTIMIZATION (same rework as prefix_filter_jaccard_pairs): the
-    per-doc shingle set folds into ONE array row per document and the
-    intersection is size(array_intersect(arr_a, arr_b)) per candidate —
-    two doc-keyed equi-joins shuffling one array per doc, instead of the
-    candidate relation exploding to one row per (pair, shared shingle)
-    through a (doc, shingle)-keyed double join. Identical pairs and
-    jaccard values (sh is distinct per doc, so the set size equals the
-    old row count and array_intersect equals the old match count)."""
-    arrs = (sh.groupBy("doc_id")
-            .agg(F.collect_set("shingle").alias("arr"))
-            .select("doc_id", "arr", F.size("arr").alias("n_sh")))
-    inter = (cand
-             .join(arrs.select(F.col("doc_id").alias("doc_a"),
-                               F.col("arr").alias("__arr_a"),
-                               F.col("n_sh").alias("na")), "doc_a")
-             .join(arrs.select(F.col("doc_id").alias("doc_b"),
-                               F.col("arr").alias("__arr_b"),
-                               F.col("n_sh").alias("nb")), "doc_b")
+
+def minhash_lsh_candidates(docs: DataFrame, num_hashes: int = 16,
+                           bands: int = 4, n: int = 3,
+                           text_col: str = "text") -> DataFrame:
+    """LSH candidates: distinct (doc_a < doc_b) agreeing on any full band."""
+    return _bucket_pairs(lsh_buckets(docs, num_hashes, bands, n, text_col))
+
+
+def _verify(cand: DataFrame, arrs: DataFrame, threshold: float) -> DataFrame:
+    def side(s):
+        return arrs.select(F.col("doc_id").alias(f"doc_{s}"),
+                           F.col("arr").alias(f"__arr_{s}"),
+                           F.size("arr").alias(f"n{s}"))
+    inter = (cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
              .select("doc_a", "doc_b", "na", "nb",
                      F.size(F.array_intersect("__arr_a", "__arr_b"))
                      .alias("n_inter")))
@@ -216,14 +204,26 @@ def jaccard_verify(cand: DataFrame, sh: DataFrame,
             .select("doc_a", "doc_b", "jaccard"))
 
 
+def jaccard_verify(cand: DataFrame, sh: DataFrame,
+                   threshold: float) -> DataFrame:
+    """Exact shingle-set Jaccard over candidate (doc_a, doc_b) pairs.
+    ``sh`` must carry distinct (doc_id, shingle) rows for every doc
+    appearing in ``cand`` (the ``shingles()`` contract). Each doc's set
+    is one array row; the intersection is size(array_intersect) per
+    candidate, over two doc-keyed equi-joins."""
+    arrs = sh.groupBy("doc_id").agg(F.collect_set("shingle").alias("arr"))
+    return _verify(cand, arrs, threshold)
+
+
 def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5,
                         num_hashes: int = 16, bands: int = 4, n: int = 3,
                         text_col: str = "text") -> DataFrame:
     """LSH candidates verified by exact Jaccard (the production dedup path:
-    probabilistic recall, exact precision)."""
-    cand = minhash_lsh_candidates(docs, num_hashes, bands, n, text_col)
-    sh = shingles(docs, n, text_col).persist()
-    return jaccard_verify(cand, sh, threshold)
+    probabilistic recall, exact precision). The per-doc sketch is pinned
+    once; both band self-join sides and both verify joins read the pin."""
+    sk = _doc_sketch(docs, num_hashes, n, text_col).localCheckpoint()
+    cand = _bucket_pairs(_bands(sk, num_hashes, bands))
+    return _verify(cand, sk, threshold)
 
 
 def simhash(docs: DataFrame, bits: int = 60, text_col: str = "text") -> DataFrame:

@@ -332,6 +332,13 @@ def _cc_alternating(und: DataFrame, max_iters: int):
     return None, max_iters, False
 
 
+def _both_ways(e: DataFrame) -> DataFrame:
+    """(a, b) and (b, a) per row, in one pass over ``e`` (a two-branch
+    union runs e's lineage twice: AQE reuses no exchange across it)."""
+    flip = F.struct(F.col("b").alias("a"), F.col("a").alias("b"))
+    return e.select(F.inline(F.array(F.struct("a", "b"), flip)))
+
+
 def connected_components(pairs: DataFrame, a_col: str = "doc_a",
                          b_col: str = "doc_b",
                          max_iters: int = 50) -> DataFrame:
@@ -353,9 +360,8 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a",
     canonical docs with no signal). Mirrors the kNN ``exact=false``
     pattern but hard-fails: a partial CC labeling has no safe use.
     """
-    und = (pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
-           .unionAll(pairs.select(F.col(b_col).alias("a"),
-                                  F.col(a_col).alias("b")))
+    und = (_both_ways(pairs.select(F.col(a_col).alias("a"),
+                                   F.col(b_col).alias("b")))
            .distinct()
            .localCheckpoint())
     labels, rounds, converged = _cc_alternating(und, max_iters)
@@ -444,30 +450,26 @@ def label_propagation(edges: DataFrame, rounds: int = 3,
     """Synchronous label propagation community detection (Raghavan et
     al., Phys. Rev. E 2007) with DETERMINISTIC tie-breaking: every node
     starts as its own label; each round, a node adopts the label most
-    frequent among its neighbors, ties broken by the SMALLEST label,
-    nodes with no neighbors keep their label.  Fixed ``rounds`` —
-    communities stabilize in a handful of sweeps on web graphs; the
-    deterministic tie rule makes the result engine-reproducible (the
-    randomized-order variant is not even run-reproducible).
+    frequent among its neighbors (a self-loop is no neighbor), ties
+    broken by the SMALLEST label.  Fixed ``rounds`` — communities
+    stabilize in a handful of sweeps on web graphs; the deterministic tie
+    rule makes the result engine-reproducible (the randomized-order
+    variant is not even run-reproducible).
 
     Distinguishes dense communities that connected_components cannot
     (CC merges anything touching; LPA keeps weakly-bridged clusters
     apart).  PageRank/HITS/TrustRank/CC/BFS/co-citation + LPA completes
     the graph suite.
 
-    Shape per round: symmetrize (map-only union) -> join labels on the
+    Shape per round: symmetrize (map-only explode) -> join labels on the
     neighbor side -> ONE (node, label) partial-agg count -> ONE per-node
     max(struct(cnt, -label)) agg — the argmax-with-min-tie fold as a
     single struct max, no window, no driver roundtrip.  O(rounds)
     shuffles keyed on node id; labels/edges never collect.
     """
-    und = (edges.select(F.col(src_col).alias("a"),
-                        F.col(dst_col).alias("b"))
-           .where(F.col("a") != F.col("b"))
-           .unionByName(
-               edges.select(F.col(dst_col).alias("a"),
-                            F.col(src_col).alias("b")))
-           .distinct())
+    und = _both_ways(edges.select(F.col(src_col).alias("a"),
+                                  F.col(dst_col).alias("b"))
+                     .where(F.col("a") != F.col("b"))).distinct()
     nodes = und.select(F.col("a").alias("id")).distinct()
     labels = nodes.select("id", F.col("id").alias("label"))
     for _ in range(int(rounds)):
@@ -621,9 +623,7 @@ def k_core(edges: DataFrame, k: int, max_iters: int = 30) -> DataFrame:
     und = (edges.where(a != b)
            .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
            .distinct())
-    sym = (und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionAll(und.select(F.col("b").alias("u"),
-                                F.col("a").alias("v")))
+    sym = (_both_ways(und).select(F.col("a").alias("u"), F.col("b").alias("v"))
            .localCheckpoint(eager=False))
     prev_alive = -1
     for _ in range(int(max_iters)):

@@ -56,7 +56,8 @@ def incremental_dedup_pairs(unchanged_index: DataFrame,
     consulted only for text of candidate-pair members (semi-join).
     LSH parameters must match the ones the index was built with.
     """
-    nb = dd.lsh_buckets(new_docs, num_hashes, bands, n, text_col).persist()
+    nb = dd.lsh_buckets(new_docs, num_hashes, bands, n,
+                        text_col).localCheckpoint()
 
     a = nb.alias("a")
     b = nb.alias("b")
@@ -73,7 +74,7 @@ def incremental_dedup_pairs(unchanged_index: DataFrame,
                        F.greatest(F.col("a.doc_id"), F.col("i.doc_id"))
                        .alias("doc_b"))
                .where(F.col("doc_a") != F.col("doc_b")))
-    cand = new_new.unionAll(new_old).distinct().persist()
+    cand = new_new.unionAll(new_old).distinct().localCheckpoint()
 
     # text re-read bounded by the candidate set: only unchanged docs
     # that actually collide with a new doc get re-shingled.
@@ -81,9 +82,8 @@ def incremental_dedup_pairs(unchanged_index: DataFrame,
                 .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
                 .distinct())
     touched_old = unchanged_docs.join(cand_ids, "doc_id", "left_semi")
-    sh = (dd.shingles(new_docs, n, text_col)
-          .unionAll(dd.shingles(touched_old, n, text_col))
-          .persist())
+    sh = dd.shingles(new_docs, n, text_col).unionAll(
+        dd.shingles(touched_old, n, text_col))
     return dd.jaccard_verify(cand, sh, threshold)
 
 

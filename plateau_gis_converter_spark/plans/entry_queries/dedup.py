@@ -608,8 +608,8 @@ def q_incremental_clusters(spark, sf_dir):
     stale = docs.where((did % 17 == 0) | (did % 13 == 0)).select("doc_id")
 
     prev_pairs = dd.minhash_dedup_pairs(docs, threshold=0.5) \
-        .select("doc_a", "doc_b").persist()
-    prev_labels = gr.connected_components(prev_pairs).persist()
+        .select("doc_a", "doc_b").localCheckpoint()
+    prev_labels = gr.connected_components(prev_pairs)
     new_pairs = inc.incremental_dedup_pairs(
         dd.lsh_buckets(unchanged), unchanged, new_docs,
         threshold=0.5).select("doc_a", "doc_b")
